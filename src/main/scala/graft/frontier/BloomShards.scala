@@ -75,34 +75,6 @@ object BloomShards {
     */
   final case class Ref(key: String, shards: DataFrame)
 
-  /** Pre-filter candidate rows against the shards WITHOUT a driver collect
-    * or closure shipping. NOTE: kept as the measured 20×-slower comparison
-    * baseline for BloomProbeBench (per-row UnsafeRow.getBinary copies the
-    * full filter bytes on every probe) — assumes a SINGLE shard row per
-    * bucket (it would double-probe rows under layered delta shards), so it
-    * is [[maybeSeenKeys]], which folds layered shards correctly — so this
-    * is private[frontier] (only BloomProbeBench may call it) and guards
-    * against layered input outright.
-    */
-  private[frontier] def flagMaybeSeen(rows: DataFrame, bloom: Option[Ref]): DataFrame = bloom match {
-    case None => rows.withColumn("maybe_seen", lit(true))
-    case Some(Ref(key, shards)) =>
-      require(shards.groupBy("host_bucket").count()
-          .filter(col("count") > 1).isEmpty,
-        "flagMaybeSeen assumes one shard per bucket; layered (base+delta) " +
-          "shards would duplicate probe rows — use maybeSeenKeys")
-      val probe = udf((bucket: Int, hash: Long, bytes: Array[Byte]) =>
-        bytes != null &&
-          cachedFilters(key, bucket, Iterator(bytes)).exists(_.mightContainLong(hash)))
-      rows
-        .join(shards.select(col("host_bucket").cast("int").as("host_bucket"),
-          col("bloom").as("__bloom_bytes")), Seq("host_bucket"), "left")
-        .withColumn("maybe_seen",
-          coalesce(probe(col("host_bucket"), col("url_hash"), col("__bloom_bytes")),
-            lit(false)))
-        .drop("__bloom_bytes")
-  }
-
   /** The maybe-seen subset of `keys` (columns url_hash, host_bucket) as a
     * one-column url_hash DataFrame — the exact-lookup key set.
     *

@@ -245,16 +245,23 @@ object Corpus {
     }.toDF("url", "warc_ts", "html", "text", "lang",
         "status_code", "content_type", "server", "link_header", "location",
         "cf_mitigated")
-    // hash-bucketed layout on the fetch-join key (≙ an Iceberg
-    // bucket(N, url) partition transform): the per-wave fetch join then
-    // co-locates by exchanging only the SMALL claimed side — no
-    // driver-serial broadcast build, still zero corpus shuffle. The
-    // pre-repartition uses the same HashPartitioning as bucketBy, so each
-    // task writes exactly its own bucket (numBuckets files total).
-    val buckets = webBuckets(spec)
+    writeWeb(spark, dir, web)
+  }
+
+  /** Write `web` as the crawl loop's fetch corpus under `dir`: the
+    * hash-bucketed layout on the fetch-join key (≙ an Iceberg
+    * bucket(N, url) partition transform), so the per-wave fetch join
+    * co-locates by exchanging only the SMALL claimed side — no
+    * driver-serial broadcast build, still zero corpus shuffle. The
+    * pre-repartition uses the same HashPartitioning as bucketBy, so each
+    * task writes exactly its own bucket (numBuckets files total). The
+    * bucket count follows the row count ([[webBuckets]]).
+    */
+  def writeWeb(spark: SparkSession, dir: String, web: DataFrame): Unit = {
+    val buckets = webBuckets(web.count())
     val tbl = tableNameFor(dir)
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    web.repartition(buckets, $"url")
+    web.repartition(buckets, col("url"))
       .write.mode("overwrite")
       .bucketBy(buckets, "url")
       .option("path", s"$dir/web")
@@ -272,11 +279,12 @@ object Corpus {
       mapper.writeValueAsBytes(node))
   }
 
-  /** Bucket count for the web table: enough for full scan parallelism at
-    * sandbox scale; at 100 TB the same layout uses thousands of buckets.
+  /** Bucket count for a web table of `rows` pages: enough for full scan
+    * parallelism at sandbox scale; at 100 TB the same layout uses
+    * thousands of buckets.
     */
-  def webBuckets(spec: Spec): Int =
-    math.min(512, math.max(32, (spec.nPages / 20000L).toInt)).toInt
+  def webBuckets(rows: Long): Int =
+    math.min(512, math.max(32, (rows / 20000L).toInt))
 
   /** Catalog table name for a corpus dir: full-width SHA-1 of the absolute
     * path, so distinct dirs can never collide (Int.hashCode could — and

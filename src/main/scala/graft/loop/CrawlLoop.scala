@@ -31,46 +31,39 @@ final class CrawlLoop(
   import spark.implicits._
 
   val store = new FrontierStore(workDir)
-  /** The fetch corpus, best layout first:
-    *  1. url-bucketed `web` table (sidecar `web_bucketspec.json` carries
-    *     the bucket spec — ≙ shared-catalog metadata): the fetch join
-    *     co-locates by exchanging only the claimed side, no broadcast;
-    *  2. pre-merged plain `web` parquet: claimed set broadcasts;
-    *  3. pages ⋈ fetch_meta joined lazily.
+  /** The fetch corpus: the url-bucketed `web` table written by
+    * [[graft.gen.Corpus.writeWeb]]. Its sidecar `web_bucketspec.json`
+    * carries the bucket spec (≙ shared-catalog metadata), so the fetch
+    * join co-locates by exchanging only the claimed side.
     */
   private[graft] val web: DataFrame = {
     val sidecar = java.nio.file.Paths.get(s"$corpusDir/web_bucketspec.json")
-    if (java.nio.file.Files.exists(sidecar)) {
-      val node = graft.extract.Json.parse(
-        new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8"))
-        .getOrElse(sys.error(s"unreadable bucket spec: $sidecar"))
-      val buckets = node.path("numBuckets").asInt()
-      val schema = node.path("schema").asText()
-      val tbl = graft.gen.Corpus.tableNameFor(corpusDir)
-      // a pre-existing registration must actually describe THIS corpus:
-      // verify location + bucket count against the sidecar, recreate on any
-      // mismatch (stale catalog entries would silently crawl the wrong data)
-      if (spark.catalog.tableExists(tbl)) {
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-        val locOk = meta.storage.locationUri.exists { u =>
-          java.nio.file.Paths.get(u.getPath).toAbsolutePath.normalize ==
-            java.nio.file.Paths.get(s"$corpusDir/web").toAbsolutePath.normalize
-        }
-        val bucketsOk = meta.bucketSpec.exists(_.numBuckets == buckets)
-        if (!locOk || !bucketsOk) spark.sql(s"DROP TABLE $tbl")
+    require(java.nio.file.Files.exists(sidecar),
+      s"$corpusDir is not a url-bucketed corpus (no $sidecar); " +
+        "write its web table with graft.gen.Corpus.writeWeb")
+    val node = graft.extract.Json.parse(
+      new String(java.nio.file.Files.readAllBytes(sidecar), "UTF-8"))
+      .getOrElse(sys.error(s"unreadable bucket spec: $sidecar"))
+    val buckets = node.path("numBuckets").asInt()
+    val schema = node.path("schema").asText()
+    val tbl = graft.gen.Corpus.tableNameFor(corpusDir)
+    // a pre-existing registration must actually describe THIS corpus:
+    // verify location + bucket count against the sidecar, recreate on any
+    // mismatch (stale catalog entries would silently crawl the wrong data)
+    if (spark.catalog.tableExists(tbl)) {
+      val meta = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(tbl))
+      val locOk = meta.storage.locationUri.exists { u =>
+        java.nio.file.Paths.get(u.getPath).toAbsolutePath.normalize ==
+          java.nio.file.Paths.get(s"$corpusDir/web").toAbsolutePath.normalize
       }
-      if (!spark.catalog.tableExists(tbl))
-        spark.sql(s"CREATE TABLE $tbl ($schema) USING parquet " +
-          s"CLUSTERED BY (url) INTO $buckets BUCKETS LOCATION '$corpusDir/web'")
-      spark.table(tbl)
-    } else if (java.nio.file.Files.exists(java.nio.file.Paths.get(s"$corpusDir/web")))
-      spark.read.parquet(s"$corpusDir/web")
-    else {
-      val pages = spark.read.parquet(s"$corpusDir/pages")
-      val meta = spark.read.parquet(s"$corpusDir/fetch_meta")
-      pages.join(meta, Seq("url"), "full_outer")
+      val bucketsOk = meta.bucketSpec.exists(_.numBuckets == buckets)
+      if (!locOk || !bucketsOk) spark.sql(s"DROP TABLE $tbl")
     }
+    if (!spark.catalog.tableExists(tbl))
+      spark.sql(s"CREATE TABLE $tbl ($schema) USING parquet " +
+        s"CLUSTERED BY (url) INTO $buckets BUCKETS LOCATION '$corpusDir/web'")
+    spark.table(tbl)
   }
 
   /** Seed insertion (S1/S2): canonicalize, filter, build frontier rows,
@@ -137,12 +130,10 @@ final class CrawlLoop(
   // steady-state waves rely on the enqueue-time pruning invariant
   private var firstStep = true
 
-  private val debugTiming = sys.env.get("SPARK_GRAFT_WAVE_TIMING").contains("1")
-
   /** Cumulative wall seconds per wave phase (log-write / delta-write /
-    * seeds-finished / valve-compact) — always accumulated (3 nanoTime
-    * calls per wave), printed per-wave only under SPARK_GRAFT_WAVE_TIMING.
-    * graft.Bench reads this for the per-phase decomposition in BENCH JSON.
+    * seeds-finished / valve-compact), accumulated on every wave (3
+    * nanoTime calls). The bench children (CrawlBenchChild, perfbench)
+    * read it for their per-phase decomposition.
     */
   val phaseSums: scala.collection.concurrent.TrieMap[String, Double] =
     scala.collection.concurrent.TrieMap.empty
@@ -151,7 +142,6 @@ final class CrawlLoop(
     val r = f
     val secs = (System.nanoTime() - t0) / 1e9
     phaseSums.updateWith(phase) { v => Some(v.getOrElse(0.0) + secs) }
-    if (debugTiming) println(f"    [wave-timing] $phase: $secs%.2fs")
     r
   }
 
@@ -337,43 +327,13 @@ final class CrawlLoop(
     // never stalls on a full-table rewrite. Only if the compactor has
     // fallen far behind (starved, crashed) does the wave fold inline, so
     // the delete-mask broadcast and scan fan-in stay bounded.
-    val valve = CrawlLoop.valveThreshold
-    val valveFired =
-      dataPaths.length + delPaths.length > valve ||
-        (snap.seen ++ sub("seen")).length > valve ||
-        (seedCountBase ++ sub("seedcnt")).length > valve ||
-        (bloomBase ++ sub("bloom")).length > valve
-    val (fPaths, fDelPaths, seenPathsV, bloomPathsV, seedPathsV) =
-      if (!valveFired)
-        (dataPaths, delPaths, snap.seen ++ sub("seen"),
-          bloomBase ++ sub("bloom"), seedCountBase ++ sub("seedcnt"))
-      else timed("valve-compact") {
-        val f = store.newTableDir(wave, "frontier-compact")
-        FrontierStore.encodeFrontier(store.readFrontierAt(spark, dataPaths, delPaths))
-          .repartition(col("host_bucket"))
-          .write.mode("overwrite").parquet(f)
-        val se = store.newTableDir(wave, "seen-compact")
-        store.readTable(spark, snap.seen ++ sub("seen"), FrontierStore.seenDdl)
-          .groupBy($"url_hash", $"host_bucket").agg(max($"kind").as("kind"))
-          .select($"url_hash", $"kind", $"host_bucket")
-          .write.mode("overwrite").parquet(se)
-        val bl =
-          if (!conf.useBloomSeenFilter) Nil
-          else {
-            val folded = store.newTableDir(wave, "bloom-fold")
-            BloomShards.build(spark,
-              store.readTable(spark, Seq(se), FrontierStore.seenDdl),
-              conf.bloomExpectedPerShard, conf.bloomFpp)
-              .write.mode("overwrite").parquet(folded)
-            Seq(folded)
-          }
-        val sc = store.newTableDir(wave, "seedcnt-compact")
-        store.readTable(spark, seedCountBase ++ sub("seedcnt"), FrontierStore.seedCountDdl)
-          .groupBy($"seed_id").agg(sum($"cnt").as("cnt"))
-          .filter($"cnt" > 0)
-          .write.mode("overwrite").parquet(sc)
-        (Seq(f), Nil: Seq[String], Seq(se), bl, Seq(sc))
-      }
+    val waveView = snap.copy(wave = wave, frontier = dataPaths,
+      frontierDeletes = delPaths, seen = snap.seen ++ sub("seen"),
+      bloom = bloomBase ++ sub("bloom"), seedCounts = seedCountBase ++ sub("seedcnt"))
+    val valveFired = fragmented(waveView, CrawlLoop.valveThreshold)
+    val v =
+      if (!valveFired) waveView
+      else timed("valve-compact") { fold(waveView, "") }
 
     val wcMap = Map(
       "claimed" -> counterRow.claimed, "fetched" -> counterRow.fetched,
@@ -394,7 +354,7 @@ final class CrawlLoop(
         if (l.version != snap.version && l.isCompaction && !valveFired) l else snap
       val (cF, cD, cSe, cBl, cSc) =
         if (valveFired || base.version == snap.version)
-          (fPaths, fDelPaths, seenPathsV, bloomPathsV, seedPathsV)
+          (v.frontier, v.frontierDeletes, v.seen, v.bloom, v.seedCounts)
         else (
           base.frontier ++ sub("add"),
           base.frontierDeletes ++ sub("del"),
@@ -415,49 +375,56 @@ final class CrawlLoop(
 
   @volatile private var compactionInFlight: Option[scala.concurrent.Future[Unit]] = None
 
-  /** Block until any in-flight background compaction has committed (or
-    * failed). Called at the end of run() so callers observe a quiescent
-    * store; never called inside the wave loop.
+  /** Block until any in-flight background compaction has committed, and
+    * rethrow its exception if it failed. Called at the end of run() so
+    * callers observe a quiescent store; never called inside the wave loop.
     */
   def awaitBackgroundWork(): Unit = compactionInFlight.foreach { f =>
     scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf)
+    compactionInFlight = None
+    f.value.get.get
   }
+
+  /** True when any of `s`'s file lists is longer than `threshold`. */
+  private def fragmented(s: store.Snapshot, threshold: Int): Boolean =
+    s.frontier.length + s.frontierDeletes.length > threshold ||
+      s.seen.length > threshold || s.seedCounts.length > threshold ||
+      s.bloom.length > threshold
 
   /** Kick off a background fold of fragmented tables from the committed
     * snapshot `s`. At most one compactor runs per loop; its commit rebases
     * onto any waves that landed meanwhile (Iceberg rewrite_data_files
     * semantics: a compaction only swaps files it read for their folded
-    * equivalent, carrying every newer delta forward untouched).
+    * equivalent, carrying every newer delta forward untouched). A failed
+    * compaction is kept for awaitBackgroundWork to rethrow and starts no
+    * new one; the waves' inline valve bounds fragmentation meanwhile.
     */
-  private def maybeCompact(s: store.Snapshot): Unit = {
-    val t = CrawlLoop.compactThreshold
-    val fragmented = s.frontier.length + s.frontierDeletes.length > t ||
-      s.seen.length > t || s.seedCounts.length > t || s.bloom.length > t
-    if (!fragmented || compactionInFlight.exists(!_.isCompleted)) return
+  private[graft] def maybeCompact(s: store.Snapshot): Unit = {
+    val busy = compactionInFlight.exists(f => !f.isCompleted || f.value.exists(_.isFailure))
+    if (busy || !fragmented(s, CrawlLoop.compactThreshold)) return
     implicit val ec: scala.concurrent.ExecutionContext = CrawlLoop.waveEc
-    compactionInFlight = Some(scala.concurrent.Future {
-      try compactFrom(s)
-      catch { case e: Throwable =>
-        System.err.println(s"[compactor] wave ${s.wave} failed: $e")
-      }
-    })
+    compactionInFlight = Some(scala.concurrent.Future(compactFrom(s)).transform(identity,
+      e => new IllegalStateException(s"background compaction of wave ${s.wave} failed", e)))
   }
 
-  /** Rewrite the fragmented tables of snapshot `s` into folded form, then
-    * commit with a CAS-rebase loop. All rewrites preserve the live view
-    * exactly: frontier folds its delete files in, seen collapses to
-    * (url_hash, max kind), seed counts fold their ± deltas, the Bloom base
-    * is rebuilt from the folded seen rows (delta layers of differing
-    * filter sizes cannot merge bitwise).
+  /** Rewrite the tables of snapshot `s` into folded form, each into a fresh
+    * `w{wave}-{prefix}{table}` directory, and return `s` with the folded
+    * lists. Every rewrite preserves the live view exactly: the frontier
+    * folds its delete files in, seen collapses to (url_hash, max kind),
+    * seed counts fold their ± deltas (dropping finished seeds), and the
+    * Bloom base is rebuilt from the folded seen rows (delta layers of
+    * differing filter sizes cannot merge bitwise). An empty seed-count or
+    * Bloom list stays empty. Callers use distinct prefixes, so a fold
+    * never overwrites another fold's input.
     */
-  private def compactFrom(s: store.Snapshot): Unit = {
-    val w = s.wave
-    val fDir = store.newTableDir(w, "bg-frontier-compact")
+  private[graft] def fold(s: store.Snapshot, prefix: String): store.Snapshot = {
+    def dir(table: String) = store.newTableDir(s.wave, prefix + table)
+    val fDir = dir("frontier-compact")
     FrontierStore.encodeFrontier(
         store.readFrontierAt(spark, s.frontier, s.frontierDeletes))
       .repartition(col("host_bucket"))
       .write.mode("overwrite").parquet(fDir)
-    val seenDir = store.newTableDir(w, "bg-seen-compact")
+    val seenDir = dir("seen-compact")
     store.readTable(spark, s.seen, FrontierStore.seenDdl)
       .groupBy($"url_hash", $"host_bucket").agg(max($"kind").as("kind"))
       .select($"url_hash", $"kind", $"host_bucket")
@@ -465,7 +432,7 @@ final class CrawlLoop(
     val seedDirs =
       if (s.seedCounts.isEmpty) Nil
       else {
-        val d = store.newTableDir(w, "bg-seedcnt-compact")
+        val d = dir("seedcnt-compact")
         store.readTable(spark, s.seedCounts, FrontierStore.seedCountDdl)
           .groupBy($"seed_id").agg(sum($"cnt").as("cnt"))
           .filter($"cnt" > 0)
@@ -475,12 +442,22 @@ final class CrawlLoop(
     val bloomDirs =
       if (!conf.useBloomSeenFilter || s.bloom.isEmpty) Nil
       else {
-        val d = store.newTableDir(w, "bg-bloom-fold")
+        val d = dir("bloom-fold")
         BloomShards.build(spark, store.readTable(spark, Seq(seenDir), FrontierStore.seenDdl),
           conf.bloomExpectedPerShard, conf.bloomFpp)
           .write.mode("overwrite").parquet(d)
         Seq(d)
       }
+    s.copy(frontier = Seq(fDir), frontierDeletes = Nil, seen = Seq(seenDir),
+      seedCounts = seedDirs, bloom = bloomDirs)
+  }
+
+  /** Fold snapshot `s` (prefix `bg-`), then commit with a CAS-rebase loop.
+    * The compactor thread enters here; the benchmark tracer attributes
+    * compaction jobs by this method's stack frame.
+    */
+  private def compactFrom(s: store.Snapshot): Unit = {
+    val f = fold(s, "bg-")
 
     // CAS-rebase commit: swap s's file lists for the folded dirs, keep
     // every path added after s. Abort if anything of s's lists has already
@@ -498,14 +475,14 @@ final class CrawlLoop(
         folded ++ cur.filterNot(old.toSet)
       try {
         store.commit(l.wave,
-          rebase(Seq(fDir), s.frontier, l.frontier),
-          rebase(Seq(seenDir), s.seen, l.seen),
+          rebase(f.frontier, s.frontier, l.frontier),
+          rebase(f.seen, s.seen, l.seen),
           l.hostState, Nil, l.frontierRows,
-          rebase(bloomDirs, s.bloom, l.bloom),
+          rebase(f.bloom, s.bloom, l.bloom),
           Map.empty,
           frontierDeletes = l.frontierDeletes.filterNot(s.frontierDeletes.toSet),
           atVersion = Some(l.version + 1),
-          seedCounts = rebase(seedDirs, s.seedCounts, l.seedCounts),
+          seedCounts = rebase(f.seedCounts, s.seedCounts, l.seedCounts),
           isCompaction = true)
         done = true
       } catch { case _: FrontierStore.CommitConflict => () } // re-read, retry

@@ -10,10 +10,10 @@ import graft.spark.Udfs
   * phases around the lineage writes so the expensive extraction runs once:
   *
   *   run():    claim (S3/W1/W2: windowed per-host rank) → seencheck (J3:
-  *             scan-side lookup vs seen) → fetch (S11: corpus ⋈ broadcast
-  *             claimed) → extract (E1-E17: UDF + explode) →
+  *             scan-side lookup vs seen) → fetch (S11: claimed ⟕ url-
+  *             bucketed corpus) → extract (E1-E17: UDF + explode) →
   *             canonicalize+filter (F1-F9) → robots (J7: broadcast) →
-  *             two log DataFrames.
+  *             one unified log DataFrame.
   *   finish(): from the *written* logs: per-seed dedupe (J1: window) →
   *             batch + frontier + seen dedupe (J2/J3: window + left-anti)
   *             → enqueue rows + seen appends.
@@ -22,18 +22,13 @@ import graft.spark.Udfs
   *  - claim is ONE shuffle keyed by host; skew safety via Catalyst's
   *    WindowGroupLimit (map-side per-host limit below the exchange), so a
   *    mega-host contributes ≤ k rows per map partition (SURVEY.md §4).
-  *  - the corpus NEVER shuffles. Over a url-bucketed corpus (the
-  *    default Corpus.write layout, ≙ Iceberg bucket(N, url)) the fetch is
-  *    ONE left-outer ShuffledHashJoin building on the wave-sized claimed
-  *    side (build-side outer tracking): only the claimed rows exchange —
-  *    no driver-serial broadcast build — and unmatched claimed rows
-  *    surface as FAILED (connection errors) in the same pass. Over a
-  *    plain corpus the fetch falls back to an INNER join with the claimed
-  *    set broadcast as the build side plus a hit-key anti-join for the
-  *    misses (a left-outer there would force a full-corpus SortMergeJoin
-  *    Exchange — BHJ cannot build the outer side; the round-1 bug).
-  *    WavePlanSpec asserts no Exchange ever sits above the corpus scan in
-  *    either mode and that both modes agree on counters + seen set.
+  *  - the corpus NEVER shuffles. It is url-bucketed (Corpus.writeWeb,
+  *    ≙ Iceberg bucket(N, url)), so the fetch is ONE left-outer
+  *    ShuffledHashJoin building on the wave-sized claimed side (build-side
+  *    outer tracking): only the claimed rows exchange — no driver-serial
+  *    broadcast build — and unmatched claimed rows surface as FAILED
+  *    (connection errors) in the same pass. WavePlanSpec asserts no
+  *    Exchange ever sits above the corpus scan.
   *  - the seen set NEVER shuffles and is never re-aggregated globally: the
   *    exact check is seen ⋈ broadcast(candidate hashes) INNER (seen
   *    streams scan-side, column-pruned to url_hash/kind), aggregated to a
@@ -160,20 +155,6 @@ object Wave {
     * Max-kind realizes the asset→seed promotion rule: "seed" > "redirect"
     * > "asset" lexically, matching seencheck.go:110-115.
     */
-  /** True when the corpus scan carries a bucket spec on `url` (registered
-    * catalog table, Corpus.write layout) — the fetch join then co-locates
-    * via the bucketing instead of a driver-built broadcast.
-    */
-  private def isBucketedOnUrl(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan.collectFirst {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        l.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.bucketSpec.exists(_.bucketColumnNames.map(_.toLowerCase) == Seq("url"))
-          case _ => false
-        }
-    }.getOrElse(false)
-
   def seenLookup(seen: DataFrame, keys: DataFrame): DataFrame =
     seen
       // no .distinct() on the keys: the broadcast hash build dedupes
@@ -248,12 +229,12 @@ object Wave {
       .withColumn("check_kind", checkKind)
       // pruned to what the logs + children read: id/url/via ride the
       // frontier for lineage but are dead weight in the claim cache and
-      // the fetch join's broadcast/shuffle payload
+      // the fetch join's shuffle payload
       .select($"url_canon", $"host", $"host_bucket", $"seed_id", $"kind",
         $"depth", $"hops", $"redirects", $"css_jump", $"ts", $"url_hash",
         $"check_kind")
-      // claimed is small (hosts × budget) and feeds 3+ branches (broadcast
-      // build, miss anti-join, seen check) — cache it once
+      // claimed is small (hosts × budget) and feeds several branches (seen
+      // check keys, lookup join, fetch join, SEEN rows) — cache it once
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val checked =
       if (!checkSeenAtClaim) hashed.withColumn("is_seen", lit(false))
@@ -271,41 +252,20 @@ object Wave {
           .drop("seen_kind")
       }
 
-    // ---- fetch (S11): INNER join, corpus always streams scan-side and
-    //      NEVER shuffles. Two co-location strategies:
-    //       a) url-bucketed corpus (Iceberg bucket(N, url) layout): a
-    //          shuffled-hash join where ONLY the small claimed side
-    //          exchanges to the corpus's bucketing — no driver-serial
-    //          broadcast build at all (the per-wave serial floor that
-    //          capped N→4N scaling);
-    //       b) plain corpus: the claimed set broadcasts as the build side
-    //          on the 8-byte fnv64 key (LongHashedRelation — cheaper to
-    //          build/probe than string keys), equality post-filter
-    //          rejecting hash collisions.
-    //      Claimed URLs absent from the corpus (≙ connection errors) are
-    //      recovered by an anti-join against the cached hit keys and
-    //      synthesized as FAILED ----
+    // ---- fetch (S11): the corpus streams scan-side and NEVER shuffles.
+    //      It is bucketed on url (Iceberg bucket(N, url) layout), so the
+    //      join is a left-outer ShuffledHashJoin where ONLY the small
+    //      claimed side exchanges to the corpus's bucketing and builds the
+    //      hash table (build-side outer tracking) — no driver-serial
+    //      broadcast build. Claimed URLs absent from the corpus (≙
+    //      connection errors) surface with null corpus columns and become
+    //      FAILED below, in the same pass ----
     val fetchable = checked.filter(!$"is_seen")
     val seenRows = checked.filter($"is_seen")
     val webR = web.withColumnRenamed("url", "page_url")
-    // Bucketed mode fuses hits AND misses into ONE pass: a left-outer
-    // ShuffledHashJoin with the claimed set as the build side (build-side
-    // outer tracking) — unmatched claimed rows surface with null corpus
-    // columns and become FAILED below, so no separate miss anti-join or
-    // union is needed. (A broadcast join cannot build the outer side —
-    // the round-1 plan bug — hence the split hits/misses path there.)
-    val bucketed = isBucketedOnUrl(web)
-    val joined =
-      if (bucketed)
-        fetchable.hint("shuffle_hash")
-          .join(webR, fetchable("url_canon") === col("page_url"), "left_outer")
-      else
-        webR
-          .withColumn("__page_hash", Udfs.fnv64($"page_url"))
-          .join(broadcast(fetchable), col("__page_hash") === fetchable("url_hash"), "inner")
-          .filter(col("page_url") === fetchable("url_canon"))
-          .drop("__page_hash")
-    val isMiss = $"page_url".isNull // bucketed-mode connection error
+    val joined = fetchable.hint("shuffle_hash")
+      .join(webR, fetchable("url_canon") === col("page_url"), "left_outer")
+    val isMiss = $"page_url".isNull // connection error
     // ---- discard hook chain (archiver/discard/discard.go:30-38), first
     //      matching hook wins: cloudflare challenge (403 + cf-mitigated:
     //      challenge), akamai challenge (403 + Server: AkamaiGHost), then
@@ -360,14 +320,11 @@ object Wave {
 
     // E1-E15 dispatch (charset handled inside, E6). The extraction output
     // feeds the unified log in ONE pipelined pass (links explode in-flight,
-    // see the fused log below) — in bucketed mode nothing downstream needs
-    // a second traversal, so there is NO persist: the former cache
-    // materialized every candidate byte into the block store and read it
+    // see the fused log below), so there is NO persist: a cache would
+    // materialize every candidate byte into the block store and read it
     // back (two full passes of memory traffic), the single biggest
-    // bus-contention source at high thread counts. Broadcast mode still
-    // persists — its miss recovery anti-joins against the hit keys, a
-    // second consumer outside the write job.
-    val extractedHits0 = hits
+    // bus-contention source at high thread counts.
+    val extracted = hits
       .withColumn("do_assets", doAssets)
       .withColumn("do_outlinks", doOutlinks)
       // the extractor reads `text` only when `html` is null (bodyBytes
@@ -382,31 +339,6 @@ object Wave {
         $"depth", $"hops", $"redirects", $"css_jump", $"ts", $"url_hash",
         $"check_kind", $"disposition", $"status_code", $"discard_reason",
         $"location", $"links")
-    val extractedHits =
-      if (bucketed) extractedHits0
-      else extractedHits0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // broadcast mode only — misses: claimed − hit keys (both sides small;
-    // hit keys read from the cache, the corpus is never scanned twice).
-    // Bucketed mode already carries the misses through the left-outer join.
-    val extracted =
-      if (bucketed) extractedHits
-      else {
-        val missKeys = extractedHits.select($"url_canon")
-        val missesRaw = fetchable.join(missKeys, Seq("url_canon"), "left_anti")
-        val hitTypes = extractedHits.schema.fields.map(f => f.name -> f.dataType).toMap
-        val missCols = missesRaw.columns.toSet
-        val misses = missesRaw.select(extractedHits.columns.map { c =>
-          if (missCols.contains(c)) col(c)
-          else c match {
-            case "disposition" => lit("FAILED").as(c)
-            case "do_assets" | "do_outlinks" => lit(false).as(c)
-            case "links" => array().cast(hitTypes(c)).as(c)
-            case _ => lit(null).cast(hitTypes(c)).as(c)
-          }
-        }: _*)
-        extractedHits.unionByName(misses)
-      }
 
     // ---- fused unified log: ONE pipelined pass. Every extracted row
     //      explodes to [sentinel → the claimed row] ++ [its candidate
@@ -421,7 +353,8 @@ object Wave {
     // candidate on every fetched row — bought nothing but field names.
     // The synthesized children below adopt (link, kind) instead, and the
     // post-explode projection aliases to raw_link/link_kind unchanged.
-    val childT = "array<struct<link:string,kind:string>>"
+    val childT = org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.Encoders.product[graft.spark.ExtractedLink].schema)
     val emptyChildren = array().cast(childT)
     val linkPairs = $"links"
     val redirectChild = when( // E16 (synthesized redirect child)
@@ -517,8 +450,7 @@ object Wave {
       case cn => lit(null).cast(fusedTypes(cn)).as(cn)
     }.toSeq: _*)
 
-    WaveLogs(fused.unionByName(seenWidened),
-      if (bucketed) Seq(hashed) else Seq(hashed, extractedHits))
+    WaveLogs(fused.unionByName(seenWidened), Seq(hashed))
   }
 
   /** Phase 2, reading the *written* logs: new-row construction, J1/J2/J3

@@ -3,7 +3,7 @@ package graft.engine
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.loop.CrawlLoop
-import graft.model.{PageRow, FetchMeta}
+import graft.model.FetchMeta
 
 /** Discard hook chain semantics (archiver/discard/discard.go:30-38 and the
   * cloudflare204 e2e scenario): challenge pages (Cloudflare 403 +
@@ -18,14 +18,8 @@ class DiscardSpec extends AnyFunSuite {
 
   /** Corpus writer with full FetchMeta control (server / cf_mitigated). */
   private def writeCorpusFull(dir: String,
-                              rows: Seq[(String, String, FetchMeta)]): Unit = {
-    val s = spark
-    import s.implicits._
-    val ts = new java.sql.Timestamp(1700000000000L)
-    rows.map { case (u, html, _) => PageRow(u, ts, html.getBytes("UTF-8"), "", "en") }
-      .toDS().write.mode("overwrite").parquet(s"$dir/pages")
-    rows.map(_._3).toDS().write.mode("overwrite").parquet(s"$dir/fetch_meta")
-  }
+                              rows: Seq[(String, String, FetchMeta)]): Unit =
+    writeWeb(dir, rows.map { case (u, html, _) => (u, html) }, rows.map(_._3))
   private def html(links: String*): String =
     "<html><body>" + links.map(l => s"""<a href="$l">x</a>""").mkString + "</body></html>"
   private def meta(u: String, status: Int = 200, server: String = "",

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.conf.ZenoConf
+import graft.gen.Corpus
 import graft.loop.CrawlLoop
 import graft.model.{PageRow, FetchMeta}
 
@@ -25,16 +26,21 @@ object EngineSpec {
 
   /** Hand-built corpus: (url, html, contentType, status, location). */
   def writeCorpus(dir: String,
-                  pages: Seq[(String, String, String, Int, String)]): Unit = {
+                  pages: Seq[(String, String, String, Int, String)]): Unit =
+    writeWeb(dir, pages.map { case (u, html, _, _, _) => (u, html) },
+      pages.map { case (u, _, ct, status, loc) => FetchMeta(u, status, ct, "", "", loc) })
+
+  /** Url-bucketed corpus (Corpus.writeWeb) of page bodies ⟗ fetch metadata
+    * on url.
+    */
+  def writeWeb(dir: String, bodies: Seq[(String, String)], meta: Seq[FetchMeta]): Unit = {
     val s = spark
     import s.implicits._
     val ts = new java.sql.Timestamp(1700000000000L)
-    pages.map { case (u, html, _, _, _) =>
+    val pagesDf = bodies.map { case (u, html) =>
       PageRow(u, ts, html.getBytes("UTF-8"), "", "en")
-    }.toDS().write.mode("overwrite").parquet(s"$dir/pages")
-    pages.map { case (u, _, ct, status, loc) =>
-      FetchMeta(u, status, ct, "", "", loc)
-    }.toDS().write.mode("overwrite").parquet(s"$dir/fetch_meta")
+    }.toDS().toDF()
+    Corpus.writeWeb(spark, dir, pagesDf.join(meta.toDS().toDF(), Seq("url"), "full_outer"))
   }
 
   def page(u: String, links: Seq[String]): (String, String, String, Int, String) = {

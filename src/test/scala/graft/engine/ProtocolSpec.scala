@@ -193,6 +193,60 @@ class ProtocolSpec extends AnyFunSuite {
       "interrupted+resumed crawl across compaction boundaries ≡ straight run")
   }
 
+  test("fold preserves the live view: frontier, seen kinds, per-seed counts; " +
+    "Bloom folds to one layer") {
+    val corpus = tmpDir("corpus")
+    // two hosts of linked pages with image assets, 2 claims per host and
+    // wave: the frontier keeps live rows and accumulates delete files, and
+    // every wave adds a seen, seed-count and Bloom delta
+    val pages = for (h <- Seq("a.com", "b.com"); i <- 0 until 8) yield {
+      val html = s"""<html><body><a href="/p${i + 1}">n</a><a href="/p${i + 2}">n</a>""" +
+        s"""<img src="/img$i.png"></body></html>"""
+      (s"http://$h/p$i", html, "text/html", 200, "")
+    }
+    writeCorpus(corpus, pages)
+    val conf = testConf.copy(disableAssetsCapture = false, rateLimitCapacity = 2.0)
+    val loop = new CrawlLoop(spark, conf, tmpDir("fold"), corpus, Map.empty)
+    loop.init(Seq("http://a.com/p0", "http://b.com/p0"))
+    assert(loop.run(3).size == 3)
+    val s = loop.store.latest.get
+    assert(s.frontierDeletes.nonEmpty && s.bloom.length > 1 && s.seedCounts.length > 1,
+      "the snapshot must carry deltas to fold")
+
+    val f = loop.fold(s, "test-")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    def frontier(x: loop.store.Snapshot) =
+      rows(loop.store.readFrontierAt(spark, x.frontier, x.frontierDeletes))
+    def seenKinds(x: loop.store.Snapshot) = rows(graft.wave.Wave.seenKinds(
+      loop.store.readTable(spark, x.seen, FrontierStore.seenDdl)))
+    def liveSeeds(x: loop.store.Snapshot) = rows(
+      loop.store.readTable(spark, x.seedCounts, FrontierStore.seedCountDdl)
+        .groupBy("seed_id").agg(sum("cnt").as("n")).filter(col("n") > 0))
+    assert(frontier(s).nonEmpty && frontier(f) == frontier(s), "live frontier unchanged")
+    assert(f.frontierDeletes.isEmpty, "deletes are folded into the frontier")
+    assert(seenKinds(f) == seenKinds(s), "seen kinds unchanged")
+    assert(liveSeeds(f) == liveSeeds(s), "per-seed live counts unchanged")
+    assert(f.bloom.length == 1, s"Bloom folds to one layer, got ${f.bloom}")
+  }
+
+  test("a failed background compaction makes run() throw") {
+    val corpus = tmpDir("corpus")
+    writeCorpus(corpus, Seq(page("http://a.com/", Seq("/1")),
+      page("http://a.com/1", Seq("/2")), page("http://a.com/2", Nil)))
+    val work = tmpDir("compact-fail")
+    val loop = new CrawlLoop(spark, testConf, work, corpus, Map.empty)
+    loop.init(Seq("http://a.com/"))
+    assert(loop.run(1).size == 1)
+    // a fragmented snapshot whose seen list names missing table dirs
+    val s = loop.store.latest.get
+    val missing = (0 to CrawlLoop.compactThreshold).map(i => s"$work/data/missing-$i")
+    loop.maybeCompact(s.copy(seen = s.seen ++ missing))
+    val e = intercept[IllegalStateException](loop.run(1))
+    assert(e.getMessage.contains("background compaction"), e.getMessage)
+    assert(loop.store.latest.get.wave == 2, "the wave itself still commits")
+    assert(loop.run(1).size == 1, "the failure is reported once")
+  }
+
   test("multi-writer: alternating loops over one store equal a single writer") {
     val corpus = tmpDir("corpus")
     val pages = (0 until 10).map(i =>

@@ -46,9 +46,8 @@ class SaltedClaimSpec extends AnyFunSuite {
     val frontier = loopOn.store.readFrontier(spark, snap)
     val seen = loopOn.store.readTable(spark, snap.seen, FrontierStore.seenDdl)
     val host = loopOn.store.readTable(spark, snap.hostState, FrontierStore.hostStateDdl)
-    val web = spark.read.parquet(s"${OracleData.Dir}/web")
     val logs = Wave.run(spark, ZenoConf(maxHops = 2, hostSaltBuckets = 4), 3,
-      frontier, seen, host, web, robots, None, checkSeenAtClaim = false)
+      frontier, seen, host, loopOn.web, robots, None, checkSeenAtClaim = false)
     val wgls = PlanShapes.flatten(logs.unified.queryExecution.executedPlan)
       .filter(_.nodeName.contains("WindowGroupLimit"))
     assert(wgls.size >= 2, s"salted claim must keep BOTH window group limits, got ${wgls.size}")
