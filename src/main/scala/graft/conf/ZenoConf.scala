@@ -9,13 +9,10 @@ final case class ZenoConf(
     maxHops: Int = 0,
     maxRedirect: Int = 20,
     maxCSSJump: Int = 10,
-    maxRetry: Int = 5,
     maxURLLength: Int = 4000,
     maxSegmentRepetition: Int = 3,
     maxSegmentRepetitionThreshold: Int = 2,
     maxOutlinks: Int = 0, // 0 = unlimited
-    workers: Int = 1,
-    maxConcurrentAssets: Int = 1,
     rateLimitCapacity: Double = 150.0,
     rateLimitRefillRate: Double = 50.0,
     includeHosts: Seq[String] = Nil,
@@ -27,17 +24,12 @@ final case class ZenoConf(
     // /root/reference/internal/pkg/config/config.go:329
     defaultExcludedHosts: Seq[String] = Seq("archive.org", "archive-it.org"),
     strictRegex: Boolean = false,
-    disableSeencheck: Boolean = false,
     disableAssetsCapture: Boolean = false,
     domainsCrawl: Seq[String] = Nil,
-    useSeencheck: Boolean = true,
-    minLinkLength: Int = 12,
     // politeness discretization: budget per host per wave (W2) =
     // refillRate * wavePeriodSeconds, capped at capacity
     wavePeriodSeconds: Double = 1.0,
     hostBuckets: Int = 64,
-    // partitioned Bloom seen-filter (north-star shape): one shard per host
-    // bucket, pre-filtering the exact seen join
     // facebook post → embed-URL child (E18); upstream dispatch exists but
     // is commented out pending a status bug (postprocessor/item.go:57-69),
     // so default-off preserves reference crawl parity
@@ -47,7 +39,6 @@ final case class ZenoConf(
     // reference's --warc-discard-status / --max-content-length
     warcDiscardStatus: Seq[Int] = Nil,
     maxContentLengthMiB: Int = 0, // 0 = unlimited
-    useBloomSeenFilter: Boolean = true,
     bloomExpectedPerShard: Long = 100000L,
     bloomFpp: Double = 0.01,
     // mega-host skew salting for the claim window (north-star shape:

@@ -29,7 +29,6 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   *   seen        — append-only file list; compaction emits the
   *                 pre-aggregated distinct (url_hash, max kind) form.
   *   host_state  — tiny, full rewrite.
-  *   counters    — append-only.
   */
 final class FrontierStore(val workDir: String) {
   private val mapper = new ObjectMapper()
@@ -45,7 +44,6 @@ final class FrontierStore(val workDir: String) {
       frontier: Seq[String], // base + append data files (live rows ⊇ view)
       seen: Seq[String],
       hostState: Seq[String],
-      counters: Seq[String],
       frontierRows: Long, // live-view row count → auto-finish without a Spark job
       bloom: Seq[String] = Nil, // Bloom shard table paths
       waveCounters: Map[String, Long] = Map.empty, // this wave's counters (lineage)
@@ -82,10 +80,11 @@ final class FrontierStore(val workDir: String) {
         val wc = node.get("wave_counters")
         wc.properties().asScala.map(e => e.getKey -> e.getValue.asLong()).toMap
       } else Map.empty[String, Long]
+    require(node.has("frontier_rows"),
+      s"snapshot manifest ${snapPath(version)} has no frontier_rows")
     Snapshot(version, node.get("wave").asInt(), arr("frontier"), arr("seen"),
-      arr("host_state"), arr("counters"),
-      if (node.has("frontier_rows")) node.get("frontier_rows").asLong() else -1L,
-      arr("bloom"), waveCounters, arr("frontier_deletes"), arr("seed_counts"),
+      arr("host_state"), node.get("frontier_rows").asLong(), arr("bloom"),
+      waveCounters, arr("frontier_deletes"), arr("seed_counts"),
       node.has("compaction") && node.get("compaction").asBoolean())
   }
 
@@ -100,8 +99,7 @@ final class FrontierStore(val workDir: String) {
     * default the latest+1 at commit time.
     */
   def commit(wave: Int, frontier: Seq[String], seen: Seq[String],
-             hostState: Seq[String], counters: Seq[String],
-             frontierRows: Long = -1L, bloom: Seq[String] = Nil,
+             hostState: Seq[String], frontierRows: Long, bloom: Seq[String] = Nil,
              waveCounters: Map[String, Long] = Map.empty,
              frontierDeletes: Seq[String] = Nil,
              atVersion: Option[Int] = None,
@@ -122,7 +120,6 @@ final class FrontierStore(val workDir: String) {
     put("seed_counts", seedCounts)
     put("seen", seen)
     put("host_state", hostState)
-    put("counters", counters)
     put("bloom", bloom)
     val wc = node.putObject("wave_counters")
     waveCounters.foreach { case (k, v) => wc.put(k, v) }
@@ -137,7 +134,7 @@ final class FrontierStore(val workDir: String) {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new FrontierStore.CommitConflict(version)
     } finally Files.deleteIfExists(tmp)
-    Snapshot(version, wave, frontier, seen, hostState, counters, frontierRows,
+    Snapshot(version, wave, frontier, seen, hostState, frontierRows,
       bloom, waveCounters, frontierDeletes, seedCounts, isCompaction)
   }
 
@@ -201,7 +198,7 @@ final class FrontierStore(val workDir: String) {
     */
   def vacuum(): Unit = latest.foreach { snap =>
     val live = (snap.frontier ++ snap.frontierDeletes ++ snap.seen ++
-      snap.hostState ++ snap.counters ++ snap.bloom ++ snap.seedCounts)
+      snap.hostState ++ snap.bloom ++ snap.seedCounts)
       .map(p => dataDir.relativize(Paths.get(p)).getName(0).toString).toSet
     val stale = {
       val s = Files.list(dataDir)
@@ -261,7 +258,4 @@ object FrontierStore {
   val seenDdl: String = "url_hash bigint, kind string, host_bucket int"
   val hostStateDdl: String =
     "host string, refill_rate double, ideal_rate double, penalty_until bigint, failure_count int"
-  val countersDdl: String =
-    "wave int, claimed bigint, fetched bigint, failed bigint, deduped bigint, " +
-    "excluded bigint, queued bigint, seeds_finished bigint"
 }

@@ -1,6 +1,6 @@
 package graft.loop
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.conf.ZenoConf
 import graft.frontier.{BloomShards, FrontierStore}
@@ -46,6 +46,10 @@ final class CrawlLoop(
       .getOrElse(sys.error(s"unreadable bucket spec: $sidecar"))
     val buckets = node.path("numBuckets").asInt()
     val schema = node.path("schema").asText()
+    // the discard chain reads cf_mitigated (graft.model.FetchMeta)
+    require(org.apache.spark.sql.types.StructType.fromDDL(schema)
+      .fieldNames.contains("cf_mitigated"),
+      s"$sidecar: the web schema has no cf_mitigated column")
     val tbl = graft.gen.Corpus.tableNameFor(corpusDir)
     // a pre-existing registration must actually describe THIS corpus:
     // verify location + bucket count against the sidecar, recreate on any
@@ -86,7 +90,7 @@ final class CrawlLoop(
         lit(0).as("css_jump"), lit(0L).as("ts"))
       .dropDuplicates("url_canon")
     val dir = store.newTableDir(0, "frontier")
-    val obs = new org.apache.spark.sql.Observation("seed-init")
+    val obs = new Observation("seed-init")
     FrontierStore.encodeFrontier(rows.observe(obs, count(lit(1)).as("rows")))
       .repartition(col("host_bucket")).write.mode("overwrite").parquet(dir)
     // per-seed live-row count baseline (+1 per seed row) — incrementally
@@ -95,36 +99,20 @@ final class CrawlLoop(
     store.readFrontierAt(spark, Seq(dir), Nil)
       .groupBy($"seed_id").agg(count(lit(1)).as("cnt"))
       .write.mode("overwrite").parquet(cntDir)
-    store.commit(0, Seq(dir), Nil, Nil, Nil,
+    store.commit(0, Seq(dir), Nil, Nil,
       obs.get.getOrElse("rows", 0L).asInstanceOf[Long],
       seedCounts = Seq(cntDir))
   }
 
-  def frontier: DataFrame = {
-    val snap = store.latest.getOrElse(sys.error("store not initialized"))
-    store.readFrontier(spark, snap)
-  }
-  def seen: DataFrame = {
-    val snap = store.latest.getOrElse(sys.error("store not initialized"))
-    store.readTable(spark, snap.seen, FrontierStore.seenDdl)
-  }
+  private def latest: store.Snapshot = store.latest.getOrElse(sys.error("store not initialized"))
+  def frontier: DataFrame = store.readFrontier(spark, latest)
+  def seen: DataFrame = store.readTable(spark, latest.seen, FrontierStore.seenDdl)
+  def hostState: DataFrame = store.readTable(spark, latest.hostState, FrontierStore.hostStateDdl)
   /** Per-wave counters, reconstructed from the snapshot lineage
     * (compaction snapshots are view-preserving rewrites, not waves).
     */
-  def counters: DataFrame = {
-    import spark.implicits._
-    store.history.filter(s => s.wave > 0 && !s.isCompaction).map { s =>
-      val c = s.waveCounters
-      CounterRow(s.wave, c.getOrElse("claimed", 0L), c.getOrElse("fetched", 0L),
-        c.getOrElse("failed", 0L), c.getOrElse("deduped", 0L),
-        c.getOrElse("excluded", 0L), c.getOrElse("queued", 0L),
-        c.getOrElse("seeds_finished", 0L), c.getOrElse("discarded", 0L))
-    }.toDS().toDF()
-  }
-  def hostState: DataFrame = {
-    val snap = store.latest.getOrElse(sys.error("store not initialized"))
-    store.readTable(spark, snap.hostState, FrontierStore.hostStateDdl)
-  }
+  def counters: DataFrame = store.history.filter(s => s.wave > 0 && !s.isCompaction)
+    .map(s => CounterRow.fromWaveCounters(s.wave, s.waveCounters)).toDS().toDF()
 
   // first wave of this loop instance checks seen at claim (resume guard);
   // steady-state waves rely on the enqueue-time pruning invariant
@@ -146,59 +134,65 @@ final class CrawlLoop(
   }
 
   /** Run one wave. Returns the wave's counters, or None if the frontier
-    * was empty (auto-finish, S8). Per-wave counters ride the log writes as
-    * Dataset.observe metrics (A3) — no extra aggregation jobs.
+    * was empty (auto-finish, S8). Per-wave counters ride the log and delta
+    * writes as Dataset.observe metrics (A3) — no extra aggregation jobs.
     */
-  def step(): Option[CounterRow] = {
-    val snap = store.latest.getOrElse(sys.error("store not initialized"))
-    val wave = snap.wave + 1
+  def step(): Option[CounterRow] = open().map { in =>
+    val (waveLog, logObs) = writeLog(in)
+    val (deltaDir, deltaObs) = writeDelta(in, waveLog)
+    val finished = seedsFinished(in, deltaDir)
+    val c = countersOf(in.wave, logObs, deltaObs, finished)
+    maybeCompact(commit(in, deltaDir, c))
+    c
+  }
+
+  /** What a wave reads from its base snapshot. */
+  private final class Opened(val snap: store.Snapshot, val frontier: DataFrame,
+      val seen: DataFrame, val hosts: DataFrame, val bloom: Option[BloomShards.Ref]) {
+    def wave: Int = snap.wave + 1
+  }
+
+  /** Stage open: the latest snapshot's tables, or None when its frontier is
+    * empty. Init writes the seed-count base and each wave writes its seen
+    * and Bloom deltas from one seen append, so a snapshot without counts,
+    * or with seen rows but no Bloom layers, is rejected: delta-only layers
+    * would skip the exact lookup for everything seen before them.
+    */
+  private def open(): Option[Opened] = {
+    val snap = latest
     if (snap.frontierRows == 0) return None
-    val frontierDf = store.readFrontier(spark, snap)
-    val oldRows =
-      if (snap.frontierRows >= 0) snap.frontierRows else frontierDf.count()
-    if (oldRows == 0) return None
+    val wave = snap.wave + 1
+    require(snap.seedCounts.nonEmpty,
+      s"wave $wave: snapshot v${snap.version} has no seed-count list")
+    require(snap.seen.isEmpty || snap.bloom.nonEmpty,
+      s"wave $wave: snapshot v${snap.version} has seen files but no Bloom layers")
+    // Bloom layers are cogrouped on host_bucket — nothing collects; a fresh
+    // store has none, and its exact lookup is a no-op
+    val bloom =
+      if (snap.bloom.isEmpty) None
+      else Some(BloomShards.Ref(snap.bloom.mkString(","),
+        store.readTable(spark, snap.bloom, BloomShards.ShardDdl)))
     // raw append-only seen table — never re-aggregated; Wave.seenLookup
     // streams it scan-side against the broadcast candidate hashes
-    val seenDf = store.readTable(spark, snap.seen, FrontierStore.seenDdl)
-    val hostDf = store.readTable(spark, snap.hostState, FrontierStore.hostStateDdl)
+    Some(new Opened(snap, store.readFrontier(spark, snap),
+      store.readTable(spark, snap.seen, FrontierStore.seenDdl),
+      store.readTable(spark, snap.hostState, FrontierStore.hostStateDdl), bloom))
+  }
 
-    // partitioned Bloom seen-filter shards (north-star): referenced as a
-    // DataFrame and cogrouped on host_bucket — nothing collects. The layer
-    // list (base + per-wave deltas) carries forward; this wave appends its
-    // own delta below.
-    val bloomBase: Seq[String] =
-      if (!conf.useBloomSeenFilter) Nil
-      else if (snap.bloom.nonEmpty) snap.bloom
-      else if (snap.seen.nonEmpty) {
-        // resume into a store without shards: rebuild from the full seen set
-        val rebuilt = BloomShards.build(spark,
-          seenDf, conf.bloomExpectedPerShard, conf.bloomFpp)
-        val dir = store.newTableDir(wave, "bloom-rebuild")
-        rebuilt.write.mode("overwrite").parquet(dir)
-        Seq(dir)
-      } else Nil
-    val bloomRef: Option[BloomShards.Ref] =
-      if (bloomBase.isEmpty) None
-      else Some(BloomShards.Ref(bloomBase.mkString(","),
-        store.readTable(spark, bloomBase, BloomShards.ShardDdl))) // fresh store: nothing seen yet — exact lookup is a no-op
-
-    val logs = Wave.run(spark, conf, wave, frontierDf, seenDf, hostDf,
-      web, robots, bloomRef, checkSeenAtClaim = firstStep)
+  /** Stage log-write: ONE lineage-log write (claimed + candidate rows
+    * unified), traversing the extraction once, in the Wave.encodeLog
+    * storage form. Returns the log read back in the logical schema, and
+    * its observed counts.
+    */
+  private def writeLog(in: Opened): (DataFrame, Observation) = {
+    val logs = Wave.run(spark, conf, in.wave, in.frontier, in.seen, in.hosts,
+      web, robots, in.bloom, checkSeenAtClaim = firstStep)
     firstStep = false
-
-    val dirs = Map(
-      "log" -> store.newTableDir(wave, "log"),
-      "delta" -> store.newTableDir(wave, "delta"))
-
-    // phase-1: ONE lineage-log write (claimed + candidate rows unified) —
-    // the cached extraction is traversed once, in a single job. Written in
-    // the Wave.encodeLog storage form (redundant URL strings nulled,
-    // disposition as a tiny-int code); decodeLog below restores the
-    // logical schema for phase 2.
-    val obsClaimed = new org.apache.spark.sql.Observation(s"log-$wave")
+    val dir = store.newTableDir(in.wave, "log")
+    val obs = new Observation(s"log-${in.wave}")
     val isClaimed = $"row_type" === "claimed"
     val passCode = lit(Wave.CandDisp.passCode)
-    timed("log-write") { Wave.encodeLog(logs.unified).observe(obsClaimed,
+    timed("log-write") { Wave.encodeLog(logs.unified).observe(obs,
       sum(when(isClaimed, 1L).otherwise(0L)).as("claimed"),
       sum(when(isClaimed && $"disposition".isin("FETCHED", "REDIRECT"), 1L)
         .otherwise(0L)).as("fetched"),
@@ -207,84 +201,76 @@ final class CrawlLoop(
       sum(when(isClaimed && $"disposition" === "SEEN", 1L).otherwise(0L)).as("seen"),
       sum(when(!isClaimed && $"cand_disposition" =!= passCode, 1L).otherwise(0L)).as("excluded"),
       sum(when(!isClaimed && $"cand_disposition" === passCode, 1L).otherwise(0L)).as("passed"))
-      .write.mode("overwrite").parquet(dirs("log")) }
-    val obsCands = obsClaimed
+      .write.mode("overwrite").parquet(dir) }
     logs.cached.foreach(_.unpersist())
-
-    // phase-2: ONE union-schema delta write per wave. The frontier is
-    // never rewritten — the wave contributes row_type-partitioned subsets
-    // (add = enqueue rows, del = claimed keys, seen = processed hashes,
-    // host = rate-limiter state, bloom = this wave's delta shards), each
-    // referenced from the manifest as its own table path. Fusing five
-    // writes into one job cuts the per-wave driver-serial floor that caps
-    // N→4N scaling efficiency.
     // explicit schema (known from the DataFrame just written) — parquet
     // schema inference re-reads file footers on the driver every wave
-    val waveLog = Wave.decodeLog(spark.read
-      .schema(Wave.encodedLogSchema(logs.unified.schema)).parquet(dirs("log")))
+    (Wave.decodeLog(spark.read
+      .schema(Wave.encodedLogSchema(logs.unified.schema)).parquet(dir)), obs)
+  }
+
+  /** Stage delta-write: ONE union-schema write of the wave's row_type
+    * subsets (add = enqueue rows, del = claimed keys, seen = processed
+    * hashes, host = rate-limiter state, seedcnt = per-seed count deltas,
+    * bloom = delta shards), each a table path of the manifest ([[sub]]).
+    * The frontier is never rewritten, and one job instead of six cuts the
+    * per-wave driver-serial floor. Returns the dir and the queued count.
+    */
+  private def writeDelta(in: Opened, waveLog: DataFrame): (String, Observation) = {
     val claimedLog = waveLog.filter($"row_type" === "claimed")
     val candLog = waveLog.filter($"row_type" === "cand")
-    val fin =
-      Wave.finish(spark, conf, wave, frontierDf, seenDf, claimedLog, candLog, bloomRef)
-
+    val fin = Wave.finish(spark, conf, in.wave, in.frontier, in.seen,
+      claimedLog, candLog, in.bloom)
     val deletes = claimedLog.select($"url_canon",
-      graft.spark.LongParam.col(wave.toLong).as("del_wave"))
-    val hostNext = Wave.nextHostState(spark, conf, wave, hostDf, claimedLog)
+      graft.spark.LongParam.col(in.wave.toLong).as("del_wave"))
+    val hostNext = Wave.nextHostState(spark, conf, in.wave, in.hosts, claimedLog)
     // per-wave Bloom DELTA shards: one small filter per bucket this wave
     // touched (write/shuffle bytes ∝ wave size — a full shard merge would
     // move the entire filter set, ~12 GB/wave at 10^10 seen). Layers fold
     // only when the list fragments, from the already-compacted seen table.
-    val bloomNext: Option[DataFrame] =
-      if (!conf.useBloomSeenFilter) None
-      else Some(BloomShards.buildDelta(spark, fin.seenAppend, conf.bloomFpp))
+    val bloomNext = BloomShards.buildDelta(spark, fin.seenAppend, conf.bloomFpp)
     // per-seed live-row count delta: −1 per claim, +1 per enqueue — ONE
     // map-side-combinable aggregation over the union (not one shuffle each)
     val seedDelta = claimedLog.select($"seed_id", lit(-1L).as("d"))
       .unionByName(fin.enqueued.select($"seed_id", lit(1L).as("d")))
       .groupBy($"seed_id").agg(sum($"d").as("cnt"))
-    // resume into a store without count history: rebuild the baseline from
-    // the live view once (same seam as the bloom rebuild)
-    val seedCountBase: Seq[String] =
-      if (snap.seedCounts.nonEmpty) snap.seedCounts
-      else {
-        val d = store.newTableDir(wave, "seedcnt-rebuild")
-        frontierDf.groupBy($"seed_id").agg(count(lit(1)).as("cnt"))
-          .write.mode("overwrite").parquet(d)
-        Seq(d)
-      }
     // the add subset is stored in the frontier's physical encoding (id
     // elided, url/seed_id nulled where redundant); seedDelta above reads
     // the LOGICAL fin.enqueued, so its seed_id grouping is unaffected
-    val delta = CrawlLoop.unionBySchema(
-      Seq("add" -> FrontierStore.encodeFrontier(fin.enqueued), "del" -> deletes,
-        "seen" -> fin.seenAppend,
-        "host" -> hostNext, "seedcnt" -> seedDelta) ++ bloomNext.map("bloom" -> _))
-
-    val obsEnq = new org.apache.spark.sql.Observation(s"delta-$wave")
+    val delta = CrawlLoop.unionBySchema(Seq(
+      "add" -> FrontierStore.encodeFrontier(fin.enqueued), "del" -> deletes,
+      "seen" -> fin.seenAppend, "host" -> hostNext, "seedcnt" -> seedDelta,
+      "bloom" -> bloomNext))
+    val dir = store.newTableDir(in.wave, "delta")
+    val obs = new Observation(s"delta-${in.wave}")
     timed("delta-write") {
-      delta.observe(obsEnq,
+      delta.observe(obs,
           sum(when($"row_type" === "add", 1L).otherwise(0L)).as("queued"))
-        .write.partitionBy("row_type").mode("overwrite").parquet(dirs("delta")) }
-    def sub(rt: String): Seq[String] = {
-      val p = s"${dirs("delta")}/row_type=$rt"
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(p))) Seq(p) else Nil
-    }
-    // seeds finished = seeds whose live-row count (Σ of the incremental ±1
-    // deltas, including this wave's) reaches 0 THIS wave — a scan of the
-    // wave-sized count-delta history semi-joined against the broadcast
-    // seed set of THIS wave's delta; the frontier is NOT re-scanned and
-    // neither is the wave-sized claimed log: a seed's sum can cross to ≤0
-    // only on a wave that claimed it, and any claimed seed has a row in
-    // the wave's aggregated seedcnt delta (−1 per claim survives the
-    // groupBy even when enqueues cancel it to 0), so the tiny pre-
-    // aggregated delta is an exact stand-in for the claimed-seed set.
-    // Seeds that finished on an EARLIER wave have no delta row this wave
-    // (no live rows → no claims; rediscovered URLs are seen-pruned before
-    // enqueue) and cannot be re-counted. Reads the delta from the WRITTEN
-    // parquet (recomputing it from lineage would re-execute the whole
-    // finish DAG — J1 window, J2 semi/anti, J3 lookup — a second time).
-    val finished = timed("seeds-finished") {
-      val waveDelta = sub("seedcnt")
+        .write.partitionBy("row_type").mode("overwrite").parquet(dir) }
+    fin.cached.foreach(_.unpersist())
+    (dir, obs)
+  }
+
+  /** The row_type subset `rt` of a delta dir, if the wave wrote any. */
+  private def sub(deltaDir: String, rt: String): Seq[String] = {
+    val p = s"$deltaDir/row_type=$rt"
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(p))) Seq(p) else Nil
+  }
+
+  /** Stage seeds-finished: seeds whose live-row count (Σ of the ±1 deltas,
+    * this wave's included) reaches 0 THIS wave. Neither the frontier nor
+    * the claimed log is re-scanned: a seed's sum can cross to ≤0 only on a
+    * wave that claimed it, and every claimed seed has a row in the wave's
+    * aggregated seedcnt delta (−1 per claim survives the groupBy even when
+    * enqueues cancel it to 0), so that tiny delta, broadcast, stands in
+    * for the claimed-seed set. Seeds finished on an EARLIER wave have no
+    * delta row (no live rows → no claims; rediscovered URLs are seen-
+    * pruned before enqueue). The delta is read from the WRITTEN parquet:
+    * recomputing it would re-run the whole finish DAG.
+    */
+  private def seedsFinished(in: Opened, deltaDir: String): Long =
+    timed("seeds-finished") {
+      val waveDelta = sub(deltaDir, "seedcnt")
       if (waveDelta.isEmpty) 0L
       else {
         // no .distinct(): the broadcast semi hash build dedupes, a distinct
@@ -292,83 +278,63 @@ final class CrawlLoop(
         val touchedSeeds = store
           .readTable(spark, waveDelta, FrontierStore.seedCountDdl)
           .select($"seed_id")
-        store.readTable(spark, seedCountBase ++ waveDelta, FrontierStore.seedCountDdl)
+        store.readTable(spark, in.snap.seedCounts ++ waveDelta, FrontierStore.seedCountDdl)
           .join(broadcast(touchedSeeds), Seq("seed_id"), "left_semi")
           .groupBy($"seed_id").agg(sum($"cnt").as("n"))
           .filter($"n" <= 0)
           .count()
       }
     }
-    fin.cached.foreach(_.unpersist())
-    val dataPaths = snap.frontier ++ sub("add")
-    val delPaths = snap.frontierDeletes ++ sub("del")
-    val hostPaths = if (sub("host").nonEmpty) sub("host") else snap.hostState
 
-    def m(o: org.apache.spark.sql.Observation, k: String): Long =
+  /** Stage counters: the wave's counters from the observed metrics. */
+  private def countersOf(wave: Int, log: Observation, delta: Observation,
+                         finished: Long): CounterRow = {
+    def m(o: Observation, k: String): Long =
       o.get.get(k).collect { case l: Long => l }.getOrElse(0L)
-    val claimed = m(obsClaimed, "claimed")
-    val queued = m(obsEnq, "queued")
+    val queued = m(delta, "queued")
+    // dedupe = seencheck hits at claim + candidates dropped by J1/J2/J3
+    CounterRow(wave, claimed = m(log, "claimed"), fetched = m(log, "fetched"),
+      failed = m(log, "failed"), deduped = m(log, "seen") + (m(log, "passed") - queued),
+      excluded = m(log, "excluded"), queued = queued, seeds_finished = finished,
+      discarded = m(log, "discarded"))
+  }
+
+  /** Stage commit, CAS loop included. SAFETY VALVE: compaction normally
+    * runs in the BACKGROUND between waves (maybeCompact, the Iceberg
+    * rewrite_data_files seam); only if the compactor has fallen far behind
+    * does the wave fold inline, so the delete-mask broadcast and scan
+    * fan-in stay bounded. Otherwise, if the compactor landed a
+    * view-preserving snapshot meanwhile, the wave's paths go on top of it —
+    * its deltas are view-level facts, valid over any equivalent base.
+    * External writers keep the OCC semantics (ProtocolSpec).
+    */
+  private def commit(in: Opened, deltaDir: String, c: CounterRow): store.Snapshot = {
+    val snap = in.snap
+    val hosts = if (sub(deltaDir, "host").nonEmpty) sub(deltaDir, "host") else snap.hostState
+    def withWave(base: store.Snapshot): store.Snapshot = base.copy(wave = in.wave,
+      frontier = base.frontier ++ sub(deltaDir, "add"),
+      frontierDeletes = base.frontierDeletes ++ sub(deltaDir, "del"),
+      seen = base.seen ++ sub(deltaDir, "seen"), hostState = hosts,
+      bloom = base.bloom ++ sub(deltaDir, "bloom"),
+      seedCounts = base.seedCounts ++ sub(deltaDir, "seedcnt"))
+    val waveView = withWave(snap)
+    val folded =
+      if (!fragmented(waveView, CrawlLoop.valveThreshold)) None
+      else Some(timed("valve-compact") { fold(waveView, "") })
     // live-row arithmetic: every claimed row leaves the view (claimed ⊆
     // frontier by construction), every enqueued row enters it
-    val newRows = oldRows - claimed + queued
-    val counterRow = CounterRow(wave,
-      claimed = claimed,
-      fetched = m(obsClaimed, "fetched"),
-      failed = m(obsClaimed, "failed"),
-      // dedupe = seencheck hits at claim + candidates dropped by J1/J2/J3
-      deduped = m(obsClaimed, "seen") + (m(obsCands, "passed") - queued),
-      excluded = m(obsCands, "excluded"),
-      queued = queued,
-      seeds_finished = finished,
-      discarded = m(obsClaimed, "discarded"))
-
-    // SAFETY VALVE: compaction normally runs in the BACKGROUND between
-    // waves (maybeCompact, the Iceberg rewrite_data_files seam) — a wave
-    // never stalls on a full-table rewrite. Only if the compactor has
-    // fallen far behind (starved, crashed) does the wave fold inline, so
-    // the delete-mask broadcast and scan fan-in stay bounded.
-    val waveView = snap.copy(wave = wave, frontier = dataPaths,
-      frontierDeletes = delPaths, seen = snap.seen ++ sub("seen"),
-      bloom = bloomBase ++ sub("bloom"), seedCounts = seedCountBase ++ sub("seedcnt"))
-    val valveFired = fragmented(waveView, CrawlLoop.valveThreshold)
-    val v =
-      if (!valveFired) waveView
-      else timed("valve-compact") { fold(waveView, "") }
-
-    val wcMap = Map(
-      "claimed" -> counterRow.claimed, "fetched" -> counterRow.fetched,
-      "failed" -> counterRow.failed, "deduped" -> counterRow.deduped,
-      "excluded" -> counterRow.excluded, "queued" -> counterRow.queued,
-      "seeds_finished" -> counterRow.seeds_finished,
-      "discarded" -> counterRow.discarded)
-
-    // Commit with compaction-aware rebase: if the background compactor
-    // landed a (view-preserving) snapshot while this wave was computing,
-    // re-derive the path lists on top of it — the wave's deltas are
-    // view-level facts, valid over any equivalent base. External writers
-    // keep the pre-existing OCC semantics (ProtocolSpec).
+    val rows = snap.frontierRows - c.claimed + c.queued
     var committed: Option[store.Snapshot] = None
     while (committed.isEmpty) {
       val l = store.latest.getOrElse(snap)
-      val base =
-        if (l.version != snap.version && l.isCompaction && !valveFired) l else snap
-      val (cF, cD, cSe, cBl, cSc) =
-        if (valveFired || base.version == snap.version)
-          (v.frontier, v.frontierDeletes, v.seen, v.bloom, v.seedCounts)
-        else (
-          base.frontier ++ sub("add"),
-          base.frontierDeletes ++ sub("del"),
-          base.seen ++ sub("seen"),
-          (if (base.bloom.nonEmpty) base.bloom else bloomBase) ++ sub("bloom"),
-          (if (base.seedCounts.nonEmpty) base.seedCounts else seedCountBase)
-            ++ sub("seedcnt"))
-      try committed = Some(store.commit(wave, cF, cSe, hostPaths, Nil, newRows,
-        if (conf.useBloomSeenFilter) cBl else Nil, wcMap,
-        frontierDeletes = cD, atVersion = Some(l.version + 1), seedCounts = cSc))
+      val v = folded.getOrElse(
+        if (l.version != snap.version && l.isCompaction) withWave(l) else waveView)
+      try committed = Some(store.commit(in.wave, v.frontier, v.seen, v.hostState,
+        rows, v.bloom, c.waveCounters, frontierDeletes = v.frontierDeletes,
+        atVersion = Some(l.version + 1), seedCounts = v.seedCounts))
       catch { case _: FrontierStore.CommitConflict => () } // re-read, retry
     }
-    maybeCompact(committed.get)
-    Some(counterRow)
+    committed.get
   }
 
   // ---- background compaction (off the wave critical path) ----
@@ -440,7 +406,7 @@ final class CrawlLoop(
         Seq(d)
       }
     val bloomDirs =
-      if (!conf.useBloomSeenFilter || s.bloom.isEmpty) Nil
+      if (s.bloom.isEmpty) Nil
       else {
         val d = dir("bloom-fold")
         BloomShards.build(spark, store.readTable(spark, Seq(seenDir), FrontierStore.seenDdl),
@@ -477,7 +443,7 @@ final class CrawlLoop(
         store.commit(l.wave,
           rebase(f.frontier, s.frontier, l.frontier),
           rebase(f.seen, s.seen, l.seen),
-          l.hostState, Nil, l.frontierRows,
+          l.hostState, l.frontierRows,
           rebase(f.bloom, s.bloom, l.bloom),
           Map.empty,
           frontierDeletes = l.frontierDeletes.filterNot(s.frontierDeletes.toSet),

@@ -91,4 +91,19 @@ final case class CounterRow(
     // responses blocked by the discard hook chain (challenge pages,
     // discard-status, over-length bodies) — archiver.go:136-141
     discarded: Long = 0L
-)
+) {
+  /** The manifest's `wave_counters` entry: every counter but `wave`. */
+  def waveCounters: Map[String, Long] =
+    CounterRow.names.zip(productIterator.drop(1).map(_.asInstanceOf[Long])).toMap
+}
+
+object CounterRow {
+  /** Counter names in field order — the `wave_counters` keys. */
+  val names: Seq[String] = CounterRow(0, 0, 0, 0, 0, 0, 0, 0).productElementNames.drop(1).toSeq
+
+  /** Inverse of [[CounterRow.waveCounters]]; absent keys count 0. */
+  def fromWaveCounters(wave: Int, m: Map[String, Long]): CounterRow = {
+    val v = names.map(m.getOrElse(_, 0L))
+    CounterRow(wave, v(0), v(1), v(2), v(3), v(4), v(5), v(6), v(7))
+  }
+}

@@ -1,6 +1,7 @@
 package graft.spark
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -39,6 +40,17 @@ object VectorOps {
 
   private[spark] def elemType(e: Expression): DataType =
     e.dataType.asInstanceOf[ArrayType].elementType
+
+  /** The left element type alone picks a two-array kernel, so both sides
+    * must be arrays of one float or double element type.
+    */
+  private[spark] def checkVectorPair(name: String, left: Expression, right: Expression): TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (ArrayType(a, _), ArrayType(b, _)) if a == b && (a == FloatType || a == DoubleType) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (a, b) => TypeCheckResult.TypeCheckFailure(s"$name needs two arrays of " +
+        s"the same float or double element type, got ${a.catalogString} and ${b.catalogString}")
+    }
 
   // ---- scalar kernels (called from generated code — keep public) ----
 
@@ -107,6 +119,11 @@ object VectorOps {
     * NOT Math.round, which rounds ties toward +∞), and the long cast
     * truncates; both are replicated verbatim so the totals are
     * bit-identical.
+    *
+    * Overflow wraps and an out-of-range double clamps on the long cast, as
+    * the HOF form does with ANSI mode off; under ANSI mode the HOF form
+    * raises CAST_OVERFLOW / ARITHMETIC_OVERFLOW instead, this kernel never
+    * does. Neither occurs while |element| < ~3·10^6 and Σ products < 2^63.
     */
   def quantDotF(a: ArrayData, b: ArrayData): java.lang.Long = {
     val n = a.numElements()
@@ -223,6 +240,9 @@ case class DotCols(left: Expression, right: Expression) extends BinaryExpression
 
   private def isFloat = VectorOps.elemType(left) == FloatType
 
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorOps.checkVectorPair("DotCols", left, right)
+
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
     if (isFloat) VectorOps.dotColsF(x, y) else VectorOps.dotColsD(x, y)
@@ -253,6 +273,9 @@ case class QuantDotCols(left: Expression, right: Expression) extends BinaryExpre
   override def nullable: Boolean = true
 
   private def isFloat = VectorOps.elemType(left) == FloatType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorOps.checkVectorPair("QuantDotCols", left, right)
 
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import graft.conf.ZenoConf
 import graft.gen.Corpus
 import graft.loop.CrawlLoop
+import scala.jdk.CollectionConverters._
 
 /** One timed crawl in a fresh JVM (spawned by graft.Bench) so JIT/GC state
   * never bleeds between the N-core and 4N-core measurements.
@@ -148,13 +149,13 @@ object CrawlBenchChild {
     val taskCpuNs = new java.util.concurrent.atomic.AtomicLong
     val taskGcMs = new java.util.concurrent.atomic.AtomicLong
     val taskN = new java.util.concurrent.atomic.AtomicLong
-    // job-wall accounting: Σ (job end − job start) over the timed waves.
-    // timed wall − Σ job wall = time the driver spent OUTSIDE any running
-    // job — Catalyst optimize + whole-stage codegen compile + commit +
-    // manifest IO — i.e. the per-wave serial floor that caps N→4N scaling
-    // (task-time accounting can't see it: no task is running)
-    val jobWallMs = new java.util.concurrent.atomic.AtomicLong
-    val jobN = new java.util.concurrent.atomic.AtomicLong
+    // job intervals over the timed waves. Timed wall − their UNION = time
+    // the driver spent OUTSIDE any running job — Catalyst optimize +
+    // whole-stage codegen compile + commit + manifest IO — i.e. the
+    // per-wave serial floor that caps N→4N scaling (task-time accounting
+    // can't see it: no task is running). Jobs overlap (the wave-io pool,
+    // the background compactor), so wall − Σ job wall can go negative.
+    val jobSpans = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
     val jobStartTs = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -171,24 +172,28 @@ object CrawlBenchChild {
       }
       override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
         val t0 = jobStartTs.remove(e.jobId)
-        if (t0 != null) { jobWallMs.addAndGet(e.time - t0); jobN.incrementAndGet(); () }
+        if (t0 != null) { jobSpans.add((t0.longValue, e.time)); () }
       }
     })
     // codegen-compile attribution over the timed waves: the Janino source
     // cache keys on generated source text, and any per-wave literal (wave
     // number, paths in scans don't reach codegen) forces a recompile of
     // every whole-stage unit — pure driver-serial that the job-wall gap
-    // above cannot decompose on its own
+    // above cannot decompose on its own. Only the count is exact: the
+    // compile-time histogram samples its values and keeps no sum.
     import org.apache.spark.metrics.source.CodegenMetrics
     val compile0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    val compileMs0 =
-      CodegenMetrics.METRIC_COMPILATION_TIME.getSnapshot.getMean * compile0
+    val wall0 = System.currentTimeMillis()
     val t0 = System.nanoTime()
     val counters = loop.run(wavesS.toInt)
     val secs = (System.nanoTime() - t0) / 1e9
+    val wall1 = System.currentTimeMillis()
     val compileN = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compile0
-    val compileMs = CodegenMetrics.METRIC_COMPILATION_TIME.getSnapshot.getMean *
-      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compileMs0
+    // union of the job intervals, clipped to the timed window
+    val spans = jobSpans.asScala.toSeq
+    var (busyMs, curEnd) = (0L, wall0)
+    spans.map { case (a, b) => (math.max(a, wall0), math.min(b, wall1)) }.sortBy(_._1)
+      .foreach { case (a, b) => if (b > curEnd) { busyMs += b - math.max(a, curEnd); curEnd = b } }
     val workDone = counters.map(c => c.claimed + c.queued + c.deduped).sum
     val phases = loop.phaseSums.toSeq.sortBy(_._1)
       .map { case (p, s) => f"$p=$s%.2f" }.mkString(" ")
@@ -196,9 +201,8 @@ object CrawlBenchChild {
     println(f"CRAWL_UTIL run=${taskRunMs.get / 1e3}%.1f cpu=${taskCpuNs.get / 1e9}%.1f " +
       f"gc=${taskGcMs.get / 1e3}%.1f tasks=${taskN.get}%d " +
       f"util=${taskRunMs.get / 1e3 / (cores * secs)}%.3f")
-    println(f"CRAWL_DRIVER job_wall=${jobWallMs.get / 1e3}%.1f jobs=${jobN.get}%d " +
-      f"gap=${secs - jobWallMs.get / 1e3}%.1f " +
-      f"compile_n=$compileN%d compile_secs=${compileMs / 1e3}%.1f")
+    println(f"CRAWL_DRIVER job_wall=${spans.map(s => s._2 - s._1).sum / 1e3}%.1f " +
+      f"jobs=${spans.size}%d gap=${(wall1 - wall0 - busyMs) / 1e3}%.1f compile_n=$compileN%d")
     println(f"CRAWL_RESULT $workDone $secs%.3f")
     spark.stop()
     // the per-run crawl stores are ~GB-sized and a campaign forks many

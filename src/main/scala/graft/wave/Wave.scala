@@ -178,7 +178,6 @@ object Wave {
 
     val canonUdf = Udfs.canonicalizer(conf)
     val filterUdf = Udfs.filterTest(conf)
-    val domainsUdf = Udfs.domainsMatch(conf)
     val extractUdf = Udfs.extractor(conf)
     val robotsUdf = Udfs.robotsAllow(robots)
 
@@ -273,11 +272,8 @@ object Wave {
     //      discarded response is never extracted and the item fails
     //      terminally (archiver.go:136-141; retries cannot change a static
     //      corpus response) ----
-    val cfCol = // tolerate corpora written before the cf_mitigated column
-      if (webR.columns.contains("cf_mitigated")) $"cf_mitigated"
-      else lit(null).cast("string")
     val discardChain = Seq[(Column, String)](
-      ($"status_code" === 403 && cfCol === "challenge", "challenge_cloudflare"),
+      ($"status_code" === 403 && $"cf_mitigated" === "challenge", "challenge_cloudflare"),
       ($"status_code" === 403 && $"server" === "AkamaiGHost", "challenge_akamai")) ++
       (if (conf.warcDiscardStatus.nonEmpty)
         Seq(($"status_code".isin(conf.warcDiscardStatus.map(Integer.valueOf): _*),
@@ -356,7 +352,6 @@ object Wave {
     val childT = org.apache.spark.sql.types.ArrayType(
       org.apache.spark.sql.Encoders.product[graft.spark.ExtractedLink].schema)
     val emptyChildren = array().cast(childT)
-    val linkPairs = $"links"
     val redirectChild = when( // E16 (synthesized redirect child)
       $"disposition" === "REDIRECT" && $"location".isNotNull &&
         length($"location") > 0 && $"redirects" < conf.maxRedirect,
@@ -380,7 +375,7 @@ object Wave {
     val sentinel = array(struct(lit(null).cast("string").as("link"),
       lit(null).cast("string").as("kind"))).cast(childT)
     val children = concat(sentinel,
-      coalesce(linkPairs.cast(childT), emptyChildren), redirectChild, facebookChild)
+      coalesce($"links".cast(childT), emptyChildren), redirectChild, facebookChild)
 
     val exploded = extracted
       // native single-pass counts: size(filter(links, kind===…)) was two
@@ -520,12 +515,12 @@ object Wave {
     //      is exact on the URL string, so results are unaffected.
     //      The frontier semi and the seen lookup probe with the SAME key
     //      set (the broadcast hash builds dedupe the multiset), so the two
-    //      big-table scans are INDEPENDENT subtrees off one shared
-    //      broadcast build, and with bloom disabled the identical
-    //      Project(url_hash) child lets ReuseExchange collapse the two
-    //      builds into one. The key builds re-read the written log with
-    //      href/chost-only pruned scans — cheaper than materializing the
-    //      candidate multiset into the block store.
+    //      big-table scans are INDEPENDENT subtrees. On a fresh store (no
+    //      Bloom layers yet) both probe the identical Project(url_hash)
+    //      child, and ReuseExchange collapses the two builds into one. The
+    //      key builds re-read the written log with href/chost-only pruned
+    //      scans — cheaper than materializing the candidate multiset into
+    //      the block store.
     val pendingHits = frontier.select($"url_canon")
       .withColumn("url_hash", Udfs.fnv64($"url_canon"))
       .join(broadcast(cand.select($"url_hash")), Seq("url_hash"), "left_semi")

@@ -106,4 +106,13 @@ class DiscardSpec extends AnyFunSuite {
     val hs = loop.hostState.filter(col("host") === "a.com").collect()
     assert(hs.forall(_.getAs[Int]("failure_count") == 0))
   }
+
+  test("a corpus without the cf_mitigated column is rejected, naming the column") {
+    val corpus = tmpDir("corpus")
+    graft.gen.Corpus.writeWeb(spark, corpus, spark.range(1)
+      .select(lit("http://a.com/").as("url"), lit(200).as("status_code")))
+    val e = intercept[IllegalArgumentException](
+      new CrawlLoop(spark, testConf, tmpDir("store"), corpus, Map.empty))
+    assert(e.getMessage.contains("cf_mitigated"), e.getMessage)
+  }
 }

@@ -96,15 +96,56 @@ class ProtocolSpec extends AnyFunSuite {
     val dir = tmpDir("occ")
     val a = new FrontierStore(dir)
     val b = new FrontierStore(dir)
-    a.commit(0, Nil, Nil, Nil, Nil, 0L)
+    a.commit(0, Nil, Nil, Nil, 0L)
     // both writers read latest = v0 and target v1; a links first
-    val winner = a.commit(1, Nil, Nil, Nil, Nil, 1L, atVersion = Some(1))
+    val winner = a.commit(1, Nil, Nil, Nil, 1L, atVersion = Some(1))
     assert(winner.version == 1)
     intercept[FrontierStore.CommitConflict] {
-      b.commit(1, Nil, Nil, Nil, Nil, 2L, atVersion = Some(1))
+      b.commit(1, Nil, Nil, Nil, 2L, atVersion = Some(1))
     }
     // the loser's content must NOT have replaced the winner's
     assert(b.latest.get.frontierRows == 1L)
+  }
+
+  test("a manifest without frontier_rows is rejected, naming the manifest") {
+    val dir = tmpDir("no-rows")
+    val store = new FrontierStore(dir)
+    val manifest = java.nio.file.Paths.get(dir, "snapshots", "v00000.json")
+    java.nio.file.Files.write(manifest,
+      """{"wave":0,"version":0,"frontier":[],"seen":[]}""".getBytes("UTF-8"))
+    val e = intercept[IllegalArgumentException](store.latest)
+    assert(e.getMessage.contains(manifest.toString), e.getMessage)
+  }
+
+  /** A one-wave crawl with live frontier rows left, whose latest snapshot
+    * is then re-committed through `edit`. Returns the loop.
+    */
+  private def oneWaveThen(edit: FrontierStore#Snapshot => (Seq[String], Seq[String])): CrawlLoop = {
+    val corpus = tmpDir("corpus")
+    writeCorpus(corpus, Seq(page("http://a.com/", Seq("/1")), page("http://a.com/1", Nil)))
+    val loop = new CrawlLoop(spark, testConf, tmpDir("store"), corpus, Map.empty)
+    loop.init(Seq("http://a.com/"))
+    assert(loop.run(1).size == 1)
+    val s = loop.store.latest.get
+    assert(s.frontierRows > 0 && s.seen.nonEmpty && s.bloom.nonEmpty && s.seedCounts.nonEmpty)
+    val (bloom, seedCounts) = edit(s)
+    loop.store.commit(s.wave, s.frontier, s.seen, s.hostState, s.frontierRows, bloom,
+      s.waveCounters, frontierDeletes = s.frontierDeletes, seedCounts = seedCounts)
+    loop
+  }
+
+  test("a wave rejects a snapshot with seen files but no Bloom layers") {
+    val loop = oneWaveThen(s => (Nil, s.seedCounts))
+    val e = intercept[IllegalArgumentException](loop.step())
+    assert(e.getMessage.contains("wave 2") && e.getMessage.contains("no Bloom layers"),
+      e.getMessage)
+  }
+
+  test("a wave rejects a snapshot without a seed-count list") {
+    val loop = oneWaveThen(s => (s.bloom, Nil))
+    val e = intercept[IllegalArgumentException](loop.step())
+    assert(e.getMessage.contains("wave 2") && e.getMessage.contains("no seed-count list"),
+      e.getMessage)
   }
 
   test("vacuum keeps every live table (including delta subdir references) and the crawl resumes") {

@@ -127,6 +127,16 @@ class VectorOpsSpec extends AnyFunSuite {
     assert(r.getLong(6) == r.getLong(7))
   }
 
+  test("a float/double array pair fails analysis") {
+    import spark.implicits._
+    val mixed = Seq((Array(1.0f, 2.0f), Array(1.0, 2.0))).toDF("f", "d")
+    for (e <- Seq(VectorOps.dotCols($"f", $"d"), VectorOps.quantDot($"f", $"d"),
+                  VectorOps.dotCols($"d", $"f"))) {
+      val err = intercept[org.apache.spark.sql.AnalysisException](mixed.select(e).collect())
+      assert(err.getMessage.contains("same float or double element type"), err.getMessage)
+    }
+  }
+
   // parquet-backed twin (a projection over a LocalRelation is collapsed
   // by ConvertToLocalRelation at optimize time, so plan-shape assertions
   // need a real scan underneath)
