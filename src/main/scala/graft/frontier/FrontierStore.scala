@@ -11,9 +11,10 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   * this environment — see SURVEY.md §7.0). Gives the crawl loop:
   *
   *  - atomic wave commits: a wave writes new parquet dirs, then commits a
-  *    manifest vN+1.json via temp-file + atomic rename. An interrupted wave
-  *    is invisible — mirroring the reference's claim-transaction +
-  *    reset-on-shutdown semantics (internal/pkg/source/lq/lq.go:75-93).
+  *    manifest vN+1.json via temp file + fail-if-exists link ([[commit]],
+  *    retried by [[update]]). An interrupted wave is invisible — mirroring
+  *    the reference's claim-transaction + reset-on-shutdown semantics
+  *    (internal/pkg/source/lq/lq.go:75-93).
   *  - resumability: reopen the store → latest committed snapshot.
   *  - lineage: each snapshot records wave number, per-table file lists and
   *    the wave's counters.
@@ -50,7 +51,12 @@ final class FrontierStore(val workDir: String) {
       frontierDeletes: Seq[String] = Nil, // merge-on-read delete files
       seedCounts: Seq[String] = Nil, // per-seed live-row count deltas
       isCompaction: Boolean = false // view-preserving rewrite, no wave counters
-  )
+  ) {
+    /** The table file lists under their manifest keys, in manifest order. */
+    def tables: Seq[(String, Seq[String])] = Seq("frontier" -> frontier,
+      "frontier_deletes" -> frontierDeletes, "seed_counts" -> seedCounts,
+      "seen" -> seen, "host_state" -> hostState, "bloom" -> bloom)
+  }
 
   /** List a directory's file names, closing the stream (long crawl loops
     * would otherwise leak file descriptors until GC).
@@ -94,48 +100,51 @@ final class FrontierStore(val workDir: String) {
   private def snapPath(version: Int): Path =
     snapDir.resolve(f"v$version%05d.json")
 
-  /** Atomically commit the next snapshot. `atVersion` pins the version a
-    * writer computed when it READ the store (the CAS expectation) — by
-    * default the latest+1 at commit time.
+  /** Atomically commit `next` as version `next.version` (the CAS
+    * expectation: the version after the one its writer read). Throws
+    * [[FrontierStore.CommitConflict]] if another writer took that version.
     */
-  def commit(wave: Int, frontier: Seq[String], seen: Seq[String],
-             hostState: Seq[String], frontierRows: Long, bloom: Seq[String] = Nil,
-             waveCounters: Map[String, Long] = Map.empty,
-             frontierDeletes: Seq[String] = Nil,
-             atVersion: Option[Int] = None,
-             seedCounts: Seq[String] = Nil,
-             isCompaction: Boolean = false): Snapshot = {
-    val version = atVersion.getOrElse(latest.map(_.version + 1).getOrElse(0))
+  def commit(next: Snapshot): Snapshot = {
+    val version = next.version
     val node: ObjectNode = mapper.createObjectNode()
-    node.put("wave", wave)
+    node.put("wave", next.wave)
     node.put("version", version)
-    node.put("frontier_rows", frontierRows)
-    if (isCompaction) node.put("compaction", true)
-    def put(field: String, paths: Seq[String]): Unit = {
-      val a = node.putArray(field)
+    node.put("frontier_rows", next.frontierRows)
+    if (next.isCompaction) node.put("compaction", true)
+    next.tables.foreach { case (key, paths) =>
+      val a = node.putArray(key)
       paths.foreach(a.add)
     }
-    put("frontier", frontier)
-    put("frontier_deletes", frontierDeletes)
-    put("seed_counts", seedCounts)
-    put("seen", seen)
-    put("host_state", hostState)
-    put("bloom", bloom)
     val wc = node.putObject("wave_counters")
-    waveCounters.foreach { case (k, v) => wc.put(k, v) }
+    next.waveCounters.foreach { case (k, v) => wc.put(k, v) }
     val tmp = snapDir.resolve(f".v$version%05d.json.tmp-${java.util.UUID.randomUUID()}")
     Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
     // optimistic concurrency: link() is atomic fail-if-exists, so of two
     // writers racing to commit the same version exactly one wins (the
-    // Iceberg snapshot-CAS seam); the loser re-reads latest and retries
-    // its wave against the new snapshot
+    // Iceberg snapshot-CAS seam); the loser re-reads latest in [[update]]
     try Files.createLink(snapPath(version), tmp)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new FrontierStore.CommitConflict(version)
     } finally Files.deleteIfExists(tmp)
-    Snapshot(version, wave, frontier, seen, hostState, frontierRows,
-      bloom, waveCounters, frontierDeletes, seedCounts, isCompaction)
+    next
+  }
+
+  /** The one optimistic-concurrency loop over the store: read the latest
+    * snapshot, apply `edit`, and commit the result at latest.version + 1.
+    * If another writer took that version, re-read and re-apply `edit`.
+    * An `edit` that returns None commits nothing.
+    */
+  @scala.annotation.tailrec
+  def update(edit: Snapshot => Option[Snapshot]): Option[Snapshot] = {
+    val l = latest.getOrElse(sys.error(s"store $workDir has no snapshot to update"))
+    val attempt = // None: another writer took the version
+      try Some(edit(l).map(next => commit(next.copy(version = l.version + 1))))
+      catch { case _: FrontierStore.CommitConflict => None }
+    attempt match {
+      case Some(committed) => committed
+      case None => update(edit)
+    }
   }
 
   /** Fresh parquet output dir for a table at a wave. */
@@ -197,8 +206,7 @@ final class FrontierStore(val workDir: String) {
     * windows, which a single-driver sandbox does not need).
     */
   def vacuum(): Unit = latest.foreach { snap =>
-    val live = (snap.frontier ++ snap.frontierDeletes ++ snap.seen ++
-      snap.hostState ++ snap.bloom ++ snap.seedCounts)
+    val live = snap.tables.flatMap(_._2)
       .map(p => dataDir.relativize(Paths.get(p)).getName(0).toString).toSet
     val stale = {
       val s = Files.list(dataDir)

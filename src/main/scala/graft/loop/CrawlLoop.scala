@@ -99,9 +99,8 @@ final class CrawlLoop(
     store.readFrontierAt(spark, Seq(dir), Nil)
       .groupBy($"seed_id").agg(count(lit(1)).as("cnt"))
       .write.mode("overwrite").parquet(cntDir)
-    store.commit(0, Seq(dir), Nil, Nil,
-      obs.get.getOrElse("rows", 0L).asInstanceOf[Long],
-      seedCounts = Seq(cntDir))
+    store.commit(store.Snapshot(0, 0, Seq(dir), Nil, Nil,
+      obs.get.getOrElse("rows", 0L).asInstanceOf[Long], seedCounts = Seq(cntDir)))
   }
 
   private def latest: store.Snapshot = store.latest.getOrElse(sys.error("store not initialized"))
@@ -237,10 +236,12 @@ final class CrawlLoop(
     // the add subset is stored in the frontier's physical encoding (id
     // elided, url/seed_id nulled where redundant); seedDelta above reads
     // the LOGICAL fin.enqueued, so its seed_id grouping is unaffected
-    val delta = CrawlLoop.unionBySchema(Seq(
+    val delta = Seq(
       "add" -> FrontierStore.encodeFrontier(fin.enqueued), "del" -> deletes,
       "seen" -> fin.seenAppend, "host" -> hostNext, "seedcnt" -> seedDelta,
-      "bloom" -> bloomNext))
+      "bloom" -> bloomNext)
+      .map { case (rt, df) => df.withColumn("row_type", lit(rt)) }
+      .reduce(_.unionByName(_, allowMissingColumns = true))
     val dir = store.newTableDir(in.wave, "delta")
     val obs = new Observation(s"delta-${in.wave}")
     timed("delta-write") {
@@ -299,42 +300,47 @@ final class CrawlLoop(
       discarded = m(log, "discarded"))
   }
 
-  /** Stage commit, CAS loop included. SAFETY VALVE: compaction normally
-    * runs in the BACKGROUND between waves (maybeCompact, the Iceberg
-    * rewrite_data_files seam); only if the compactor has fallen far behind
-    * does the wave fold inline, so the delete-mask broadcast and scan
-    * fan-in stay bounded. Otherwise, if the compactor landed a
-    * view-preserving snapshot meanwhile, the wave's paths go on top of it —
-    * its deltas are view-level facts, valid over any equivalent base.
-    * External writers keep the OCC semantics (ProtocolSpec).
+  /** Stage commit. SAFETY VALVE: compaction normally runs in the
+    * BACKGROUND between waves (maybeCompact, the Iceberg rewrite_data_files
+    * seam); only if the compactor has fallen far behind does the wave fold
+    * inline, so the delete-mask broadcast and scan fan-in stay bounded.
+    * Otherwise the wave lands on whatever the store's CAS loop reads as
+    * latest ([[waveOnto]]).
     */
   private def commit(in: Opened, deltaDir: String, c: CounterRow): store.Snapshot = {
-    val snap = in.snap
-    val hosts = if (sub(deltaDir, "host").nonEmpty) sub(deltaDir, "host") else snap.hostState
-    def withWave(base: store.Snapshot): store.Snapshot = base.copy(wave = in.wave,
-      frontier = base.frontier ++ sub(deltaDir, "add"),
-      frontierDeletes = base.frontierDeletes ++ sub(deltaDir, "del"),
-      seen = base.seen ++ sub(deltaDir, "seen"), hostState = hosts,
-      bloom = base.bloom ++ sub(deltaDir, "bloom"),
-      seedCounts = base.seedCounts ++ sub(deltaDir, "seedcnt"))
-    val waveView = withWave(snap)
+    val waveView = waveOnto(in.snap, in.snap, deltaDir, c)
     val folded =
       if (!fragmented(waveView, CrawlLoop.valveThreshold)) None
       else Some(timed("valve-compact") { fold(waveView, "") })
+    store.update { l =>
+      val landed = waveOnto(in.snap, l, deltaDir, c) // throws on a stale base
+      Some(folded.getOrElse(landed))
+    }.get
+  }
+
+  /** The wave commit's edit: the wave that read `base` and wrote `deltaDir`
+    * lands on `latest`. Compactions are view-preserving rewrites, so the
+    * wave's deltas (view-level facts) stay valid over any that landed since
+    * `base`. Another writer's wave does not: committing over it would drop
+    * its deltas, so this throws instead of committing on a stale base.
+    */
+  private[graft] def waveOnto(base: store.Snapshot, latest: store.Snapshot,
+                              deltaDir: String, c: CounterRow): store.Snapshot = {
+    if (latest.wave != base.wave) throw new IllegalStateException(
+      s"stale base: wave ${c.wave} read v${base.version} (wave ${base.wave}), " +
+        s"but v${latest.version} holds wave ${latest.wave} from another writer")
+    val hosts = sub(deltaDir, "host")
     // live-row arithmetic: every claimed row leaves the view (claimed ⊆
     // frontier by construction), every enqueued row enters it
-    val rows = snap.frontierRows - c.claimed + c.queued
-    var committed: Option[store.Snapshot] = None
-    while (committed.isEmpty) {
-      val l = store.latest.getOrElse(snap)
-      val v = folded.getOrElse(
-        if (l.version != snap.version && l.isCompaction) withWave(l) else waveView)
-      try committed = Some(store.commit(in.wave, v.frontier, v.seen, v.hostState,
-        rows, v.bloom, c.waveCounters, frontierDeletes = v.frontierDeletes,
-        atVersion = Some(l.version + 1), seedCounts = v.seedCounts))
-      catch { case _: FrontierStore.CommitConflict => () } // re-read, retry
-    }
-    committed.get
+    latest.copy(wave = c.wave,
+      frontier = latest.frontier ++ sub(deltaDir, "add"),
+      frontierDeletes = latest.frontierDeletes ++ sub(deltaDir, "del"),
+      seen = latest.seen ++ sub(deltaDir, "seen"),
+      hostState = if (hosts.nonEmpty) hosts else latest.hostState,
+      bloom = latest.bloom ++ sub(deltaDir, "bloom"),
+      seedCounts = latest.seedCounts ++ sub(deltaDir, "seedcnt"),
+      frontierRows = base.frontierRows - c.claimed + c.queued,
+      waveCounters = c.waveCounters, isCompaction = false)
   }
 
   // ---- background compaction (off the wave critical path) ----
@@ -418,40 +424,29 @@ final class CrawlLoop(
       seedCounts = seedDirs, bloom = bloomDirs)
   }
 
-  /** Fold snapshot `s` (prefix `bg-`), then commit with a CAS-rebase loop.
-    * The compactor thread enters here; the benchmark tracer attributes
-    * compaction jobs by this method's stack frame.
+  /** Fold snapshot `s` (prefix `bg-`), then commit through the store's CAS
+    * loop: swap s's file lists for the folded dirs and keep every path added
+    * after s. Commit nothing if any of s's lists was already folded by
+    * someone else (the inline safety valve): the folded dirs would
+    * double-count rows. The compactor thread enters here; the benchmark
+    * tracer attributes compaction jobs by this method's stack frame.
     */
   private def compactFrom(s: store.Snapshot): Unit = {
     val f = fold(s, "bg-")
-
-    // CAS-rebase commit: swap s's file lists for the folded dirs, keep
-    // every path added after s. Abort if anything of s's lists has already
-    // been folded by someone else (the inline safety valve) — the folded
-    // dirs would double-count rows.
-    var done = false
-    while (!done) {
-      val l = store.latest.getOrElse(s)
-      def subsetOk(a: Seq[String], b: Seq[String]) = a.toSet.subsetOf(b.toSet)
-      if (!subsetOk(s.frontier, l.frontier) ||
-          !subsetOk(s.frontierDeletes, l.frontierDeletes) ||
-          !subsetOk(s.seen, l.seen) || !subsetOk(s.seedCounts, l.seedCounts) ||
-          !subsetOk(s.bloom, l.bloom)) return
-      def rebase(folded: Seq[String], old: Seq[String], cur: Seq[String]) =
-        folded ++ cur.filterNot(old.toSet)
-      try {
-        store.commit(l.wave,
-          rebase(f.frontier, s.frontier, l.frontier),
-          rebase(f.seen, s.seen, l.seen),
-          l.hostState, l.frontierRows,
-          rebase(f.bloom, s.bloom, l.bloom),
-          Map.empty,
-          frontierDeletes = l.frontierDeletes.filterNot(s.frontierDeletes.toSet),
-          atVersion = Some(l.version + 1),
-          seedCounts = rebase(f.seedCounts, s.seedCounts, l.seedCounts),
-          isCompaction = true)
-        done = true
-      } catch { case _: FrontierStore.CommitConflict => () } // re-read, retry
+    def intact(old: Seq[String], cur: Seq[String]) = old.toSet.subsetOf(cur.toSet)
+    def rebase(folded: Seq[String], old: Seq[String], cur: Seq[String]) =
+      folded ++ cur.filterNot(old.toSet)
+    store.update { l =>
+      if (!intact(s.frontier, l.frontier) || !intact(s.frontierDeletes, l.frontierDeletes) ||
+          !intact(s.seen, l.seen) || !intact(s.seedCounts, l.seedCounts) ||
+          !intact(s.bloom, l.bloom)) None
+      else Some(l.copy(
+        frontier = rebase(f.frontier, s.frontier, l.frontier),
+        frontierDeletes = rebase(f.frontierDeletes, s.frontierDeletes, l.frontierDeletes),
+        seen = rebase(f.seen, s.seen, l.seen),
+        bloom = rebase(f.bloom, s.bloom, l.bloom),
+        seedCounts = rebase(f.seedCounts, s.seedCounts, l.seedCounts),
+        waveCounters = Map.empty, isCompaction = true))
     }
   }
 
@@ -480,24 +475,6 @@ object CrawlLoop {
     * keeps the delete-mask broadcast and scan fan-in bounded even then).
     */
   val valveThreshold = 64
-
-  /** Union heterogeneous per-wave delta tables into ONE row_type-tagged
-    * DataFrame (absent columns null-padded), so a single
-    * partitionBy(row_type) write replaces five separate write jobs. The
-    * manifest then references each row_type subdirectory as its own table.
-    */
-  def unionBySchema(parts: Seq[(String, DataFrame)]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val types = parts.flatMap(_._2.schema.fields)
-      .map(f => f.name -> f.dataType).toMap
-    val all = parts.flatMap(_._2.columns).distinct
-    parts.map { case (rt, df) =>
-      val have = df.columns.toSet
-      df.select(all.map(c =>
-        if (have.contains(c)) col(c) else lit(null).cast(types(c)).as(c)): _*)
-        .withColumn("row_type", lit(rt))
-    }.reduce(_ unionByName _)
-  }
 
   /** Shared daemon pool for concurrent per-wave job submission. */
   val waveEc: scala.concurrent.ExecutionContext =

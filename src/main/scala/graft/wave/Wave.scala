@@ -433,19 +433,15 @@ object Wave {
           $"raw_link", $"link_kind", $"href", $"chost",
           when(!isClaim, candDisp).as("cand_disposition")): _*)
 
-    // seencheck hits (first wave only): claimed rows with disposition SEEN
-    val fusedTypes = fused.schema.fields.map(f => f.name -> f.dataType).toMap
-    val seenHave = seenRows.columns.toSet
-    val seenWidened = seenRows.select(fused.columns.map {
-      case "row_type" => lit("claimed").as("row_type")
-      case "disposition" => lit("SEEN").as("disposition")
-      case "n_outlinks" => lit(0).as("n_outlinks")
-      case "n_assets" => lit(0).as("n_assets")
-      case cn if seenHave.contains(cn) => col(cn)
-      case cn => lit(null).cast(fusedTypes(cn)).as(cn)
-    }.toSeq: _*)
+    // seencheck hits (first wave only): claimed rows with disposition SEEN,
+    // the log columns they lack null
+    val seenClaims = seenRows.drop("is_seen")
+      .withColumn("row_type", lit("claimed"))
+      .withColumn("disposition", lit("SEEN"))
+      .withColumn("n_outlinks", lit(0))
+      .withColumn("n_assets", lit(0))
 
-    WaveLogs(fused.unionByName(seenWidened), Seq(hashed))
+    WaveLogs(fused.unionByName(seenClaims, allowMissingColumns = true), Seq(hashed))
   }
 
   /** Phase 2, reading the *written* logs: new-row construction, J1/J2/J3

@@ -96,15 +96,58 @@ class ProtocolSpec extends AnyFunSuite {
     val dir = tmpDir("occ")
     val a = new FrontierStore(dir)
     val b = new FrontierStore(dir)
-    a.commit(0, Nil, Nil, Nil, 0L)
+    a.commit(a.Snapshot(0, 0, Nil, Nil, Nil, 0L))
     // both writers read latest = v0 and target v1; a links first
-    val winner = a.commit(1, Nil, Nil, Nil, 1L, atVersion = Some(1))
+    val readByB = b.latest.get
+    val winner = a.commit(a.latest.get.copy(version = 1, wave = 1, frontierRows = 1L))
     assert(winner.version == 1)
     intercept[FrontierStore.CommitConflict] {
-      b.commit(1, Nil, Nil, Nil, 2L, atVersion = Some(1))
+      b.commit(readByB.copy(version = 1, wave = 1, frontierRows = 2L))
     }
     // the loser's content must NOT have replaced the winner's
     assert(b.latest.get.frontierRows == 1L)
+  }
+
+  test("commit then latest round-trips every snapshot field") {
+    val store = new FrontierStore(tmpDir("roundtrip"))
+    val wave = store.Snapshot(0, 3, Seq("f1", "f2"), Seq("s1"), Seq("h1"), 42L,
+      bloom = Seq("b1", "b2"), waveCounters = Map("claimed" -> 7L, "queued" -> 9L),
+      frontierDeletes = Seq("d1"), seedCounts = Seq("c1", "c2"))
+    store.commit(wave)
+    assert(store.latest.contains(wave))
+    val compaction = wave.copy(version = 1, frontier = Seq("F"), frontierDeletes = Nil,
+      waveCounters = Map.empty, isCompaction = true)
+    store.commit(compaction)
+    assert(store.latest.contains(compaction))
+    assert(store.history == Seq(wave, compaction))
+  }
+
+  test("update: an edit returning None commits nothing") {
+    val dir = tmpDir("update-none")
+    val store = new FrontierStore(dir)
+    store.commit(store.Snapshot(0, 0, Seq("f"), Nil, Nil, 1L))
+    assert(store.update(_ => None).isEmpty)
+    import scala.jdk.CollectionConverters._
+    val names = java.nio.file.Files.list(java.nio.file.Paths.get(dir, "snapshots"))
+    try assert(names.iterator().asScala.map(_.getFileName.toString).toSeq == Seq("v00000.json"))
+    finally names.close()
+  }
+
+  test("update: a lost version re-reads latest and re-applies the edit") {
+    val dir = tmpDir("update-retry")
+    val store = new FrontierStore(dir)
+    val other = new FrontierStore(dir)
+    store.commit(store.Snapshot(0, 0, Seq("f"), Nil, Nil, 1L))
+    var bases = Vector.empty[Int]
+    val committed = store.update { l =>
+      // the first time, another writer takes v1 between this read and the commit
+      if (bases.isEmpty) other.commit(other.latest.get.copy(version = 1, seen = Seq("s")))
+      bases :+= l.version
+      Some(l.copy(frontier = l.frontier :+ "g"))
+    }
+    assert(bases == Vector(0, 1), "the edit is re-applied to the snapshot that won")
+    assert(committed.map(s => (s.version, s.frontier, s.seen)).contains((2, Seq("f", "g"), Seq("s"))))
+    assert(store.latest == committed)
   }
 
   test("a manifest without frontier_rows is rejected, naming the manifest") {
@@ -129,8 +172,7 @@ class ProtocolSpec extends AnyFunSuite {
     val s = loop.store.latest.get
     assert(s.frontierRows > 0 && s.seen.nonEmpty && s.bloom.nonEmpty && s.seedCounts.nonEmpty)
     val (bloom, seedCounts) = edit(s)
-    loop.store.commit(s.wave, s.frontier, s.seen, s.hostState, s.frontierRows, bloom,
-      s.waveCounters, frontierDeletes = s.frontierDeletes, seedCounts = seedCounts)
+    loop.store.commit(s.copy(version = s.version + 1, bloom = bloom, seedCounts = seedCounts))
     loop
   }
 
@@ -146,6 +188,42 @@ class ProtocolSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](loop.step())
     assert(e.getMessage.contains("wave 2") && e.getMessage.contains("no seed-count list"),
       e.getMessage)
+  }
+
+  test("a wave lands on compactions since its base, but not on another writer's wave") {
+    val corpus = tmpDir("corpus")
+    writeCorpus(corpus, Seq(page("http://a.com/", Nil)))
+    val loop = new CrawlLoop(spark, testConf, tmpDir("store"), corpus, Map.empty)
+    // the wave read v3 (wave 2) and wrote an add, a del and a host subset
+    val deltaDir = tmpDir("delta")
+    Seq("add", "del", "host").foreach(rt =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(deltaDir, s"row_type=$rt")))
+    def sub(rt: String) = Seq(s"$deltaDir/row_type=$rt")
+    val base = loop.store.Snapshot(3, 2, Seq("f1", "f2"), Seq("s1"), Seq("h1"), 10L,
+      bloom = Seq("b1"), waveCounters = Map("claimed" -> 4L), frontierDeletes = Seq("d1"),
+      seedCounts = Seq("c1"))
+    val c = graft.model.CounterRow(3, claimed = 4, fetched = 4, failed = 0, deduped = 0,
+      excluded = 0, queued = 6, seeds_finished = 0)
+
+    val onBase = loop.waveOnto(base, base, deltaDir, c)
+    assert(onBase == base.copy(wave = 3, frontier = Seq("f1", "f2") ++ sub("add"),
+      frontierDeletes = Seq("d1") ++ sub("del"), hostState = sub("host"),
+      frontierRows = 12L, waveCounters = c.waveCounters))
+
+    // a compaction folded the frontier and deletes meanwhile: the wave's
+    // subsets go on top of the folded lists
+    val compacted = base.copy(version = 4, frontier = Seq("F"), frontierDeletes = Nil,
+      waveCounters = Map.empty, isCompaction = true)
+    assert(loop.waveOnto(base, compacted, deltaDir, c) ==
+      onBase.copy(version = 4, frontier = Seq("F") ++ sub("add"), frontierDeletes = sub("del")))
+
+    // another writer's wave 3 landed (alone, or under a compaction)
+    val otherWave = base.copy(version = 4, wave = 3, frontier = Seq("f1", "f2", "f3"))
+    for (l <- Seq(otherWave, otherWave.copy(version = 5, isCompaction = true))) {
+      val e = intercept[IllegalStateException](loop.waveOnto(base, l, deltaDir, c))
+      assert(e.getMessage.contains("wave 3 read v3 (wave 2)") &&
+        e.getMessage.contains(s"v${l.version} holds wave 3"), e.getMessage)
+    }
   }
 
   test("vacuum keeps every live table (including delta subdir references) and the crawl resumes") {
