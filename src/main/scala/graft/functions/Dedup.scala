@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Large-scale training-data deduplication operators over a `documents`
   * table (doc_id, text). Each is expressed Spark-first: shuffles only on
@@ -53,52 +54,133 @@ object Dedup {
   private[functions] def gramArray(textCol: Column, n: Int): Column =
     graft.spark.ShingleOps.gramArray(textCol, n)
 
-  /** Word-shingle set per document — explode of [[gramArray]]: a pure
-    * projection, no shuffle (explode drops empty arrays, so docs with no
-    * full n-gram are absent exactly as before).
-    */
-  def shingles(docs: DataFrame, n: Int = 2): DataFrame =
-    spread(docs).select(col("doc_id"), explode(gramArray(col("text"), n)).as("gram"))
-
-  /** Candidate pairs with n-gram Jaccard ≥ threshold, computed with an
-    * integer-only test (3·common ≥ |A|+|B| ⟺ J ≥ 0.5 for the default) to
-    * stay float-free. Shuffle = shingle join (inverted index), classic
-    * "small candidate set" shape; hot shingles can be dropped by df
-    * frequency cap for scale.
+  /** Pairs of documents whose distinct word n-gram sets have Jaccard
+    * ≥ 0.5, exact, with the integer-only test 3·common ≥ |A|+|B| (float-
+    * free). Output (doc_a, doc_b, common, size_a, size_b), all long, one
+    * row per pair with doc_a < doc_b. `doc_id` is the document key (the
+    * oracle SQL merges rows sharing an id into one gram set; callers pass
+    * one row per id). Documents with no full n-gram have no pairs.
     *
-    * The df cap itself is skew-proof: document frequency comes from a
-    * map-side-combinable `groupBy(gram).count` (partial aggregation
-    * collapses a mega-gram per input partition before the exchange — a
-    * window over gram would put every occurrence of the hottest gram in
-    * ONE partition first, recreating the exact straggler the cap guards
-    * against), and the HOT grams — at most Σoccurrences/cap distinct
-    * values, tiny by construction — broadcast into a left-anti, so the
-    * full shingle set never shuffles just to learn its df.
+    * A factorized count probe, not a gram self-join: a self-join would
+    * materialize one row per (gram, doc_a, doc_b), Σ df·(df−1)/2 rows
+    * (36.5M at sf0.1 for 256 output pairs), and group them by pair.
+    * Here every document travels as ONE gram-array row: the build side
+    * shards the rows by doc_id into K shards, the probe side replicates
+    * every row into all K, and a cogroup hands each shard its documents
+    * plus every probe. The shuffle is N build rows + K·N probe rows
+    * against Σdf² pair rows (at sf0.1 with K = 4: 25,000 rows of ~51
+    * grams against 36.5M). Inside a shard, [[countProbe]] chains each
+    * gram's postings and counts matches per probe into a dense counter.
+    *
+    * Exactness:
+    *  - counts are complete per shard: every gram of document b lives in
+    *    b's shard and every probe a reaches that shard, so common(a, b) is
+    *    summed in one place and no cross-shard aggregation is needed;
+    *  - each unordered pair is counted once, in doc_b's shard, by the
+    *    probe doc_a < doc_b;
+    *  - the size window ⌈sa/2⌉ ≤ sb ≤ 2·sa drops no pair: common ≤
+    *    min(sa, sb) and 3·common ≥ sa + sb give 2·min ≥ max.
+    *
+    * The df cap (`maxShingleFreq`; `Int.MaxValue` = uncapped) takes the
+    * hot grams (df > cap) out of the gram arrays before sharding, so they
+    * count toward no pair, while sz stays the full gram-set size (the
+    * oracle's size_a/size_b). Document frequency is a map-side-combinable
+    * `groupBy(gram).count` (partial aggregation collapses a mega-gram per
+    * input partition before the exchange); the hot list, at most
+    * Σoccurrences/cap grams, is one broadcast row.
     */
-  def ngramJaccardPairs(docs: DataFrame, n: Int = 2, maxShingleFreq: Int = 1000): DataFrame = {
-    val d = spread(docs)
-    val sh = shingles(d, n)
-    // |shingle set| per doc is a property of the row alone: size of the
-    // distinct-gram array, no exchange (was a groupBy over every exploded
-    // shingle row). cast keeps the former count(*) long type.
-    val sizes = d.select(col("doc_id"),
-      size(gramArray(col("text"), n)).cast("long").as("sz"))
-    val rare =
-      if (maxShingleFreq == Int.MaxValue) sh // exact twin: nothing to cap
+  def ngramJaccardPairs(docs: DataFrame, n: Int = 2, maxShingleFreq: Int = 1000): DataFrame =
+    jaccardJoin(docs, n, maxShingleFreq, docs.sparkSession.sparkContext.defaultParallelism)
+
+  /** [[ngramJaccardPairs]] over a given shard count K (the public operator
+    * uses the session's default parallelism).
+    */
+  private[functions] def jaccardJoin(docs: DataFrame, n: Int, maxShingleFreq: Int,
+                                     shards: Int): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val all = spread(docs).filter(col("doc_id").isNotNull)
+      .select(col("doc_id"), gramArray(col("text"), n).as("g"))
+      .filter(size(col("g")) > 0)
+      .select(col("doc_id"), size(col("g")).cast("long").as("sz"), col("g"))
+    val rows =
+      if (maxShingleFreq == Int.MaxValue) all
       else {
-        val hot = sh.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxShingleFreq).select(col("gram"))
-        sh.join(broadcast(hot), Seq("gram"), "left_anti")
+        val hot = all.select(explode(col("g")).as("gram"))
+          .groupBy(col("gram")).agg(count(lit(1)).as("df"))
+          .filter(col("df") > maxShingleFreq)
+          .agg(collect_list(col("gram")).as("hot"))
+        all.crossJoin(broadcast(hot))
+          .select(col("doc_id"), col("sz"), array_except(col("g"), col("hot")).as("g"))
+          .filter(size(col("g")) > 0)
       }
-    val pairs = rare.as("a").join(rare.as("b"),
-        col("a.gram") === col("b.gram") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("common"))
-    pairs
-      .join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sz", "size_a"), "doc_a")
-      .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sz", "size_b"), "doc_b")
-      .filter(col("common") * 3 >= col("size_a") + col("size_b")) // J ≥ 0.5
-      .select(col("doc_a"), col("doc_b"), col("common"), col("size_a"), col("size_b"))
+    def keyed(shard: Column) =
+      rows.select(shard, col("doc_id"), col("sz"), col("g")).as[Doc].groupByKey(_._1)
+    val build = keyed(pmod(xxhash64(col("doc_id")), lit(shards.toLong)).cast("int"))
+    val probe = keyed(explode(sequence(lit(0), lit(shards - 1))))
+    build.cogroup(probe)((_, b, p) => countProbe(b, p))
+      .toDF("doc_a", "doc_b", "common", "size_a", "size_b")
+  }
+
+  /** (shard, doc_id, sz, gram array) */
+  private type Doc = (Int, Long, Long, Array[String])
+
+  /** One shard's count probe. The shard's own documents are sorted by
+    * (sz, doc_id) and indexed gram → chain of their positions, so every
+    * chain is in size order. For each probe document a, the size window
+    * becomes a position range, each chain is binary-searched to it, and
+    * matches with doc_id > a are counted in a dense counter; the pairs
+    * passing 3·common ≥ sa + sb are emitted and the counter reset.
+    */
+  private def countProbe(build: Iterator[Doc], probe: Iterator[Doc])
+      : Iterator[(Long, Long, Long, Long, Long)] = {
+    val docs = build.toArray.sortBy(d => (d._3, d._2))
+    val ids = docs.map(_._2)
+    val sizes = docs.map(_._3)
+    val grow = mutable.HashMap.empty[String, mutable.ArrayBuilder.ofInt]
+    for (i <- docs.indices; gram <- docs(i)._4)
+      grow.getOrElseUpdate(gram, new mutable.ArrayBuilder.ofInt) += i
+    val chains = grow.map { case (gram, b) => gram -> b.result() }
+    // first position whose size is ≥ s
+    def from(s: Long): Int = {
+      var lo = 0
+      var hi = sizes.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (sizes(mid) < s) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+    val counts = new Array[Int](docs.length)
+    val touched = new Array[Int](docs.length)
+    probe.flatMap { case (_, a, sa, g) =>
+      val lo = from((sa + 1) / 2)
+      val hi = from(2 * sa + 1)
+      var nt = 0
+      for (gram <- g) {
+        val chain = chains.getOrElse(gram, null)
+        if (chain != null) {
+          val at = java.util.Arrays.binarySearch(chain, lo)
+          var j = if (at >= 0) at else -at - 1
+          while (j < chain.length && chain(j) < hi) {
+            val b = chain(j)
+            if (ids(b) > a) {
+              if (counts(b) == 0) { touched(nt) = b; nt += 1 }
+              counts(b) += 1
+            }
+            j += 1
+          }
+        }
+      }
+      val out = mutable.ArrayBuffer.empty[(Long, Long, Long, Long, Long)]
+      for (t <- 0 until nt) {
+        val b = touched(t)
+        val common = counts(b).toLong
+        counts(b) = 0
+        if (3 * common >= sa + sizes(b)) out += ((a, ids(b), common, sa, sizes(b)))
+      }
+      out
+    }
   }
 
   /** MinHash signatures: k permutations via affine transforms of xxhash64.

@@ -93,11 +93,35 @@ object RefImpl {
   // ---------- tokenization (mirrors split(text, " ", -1)) ----------
   def tokens(text: String): Array[String] = text.split(" ", -1)
 
-  /** Distinct word 2..n-shingles, mirroring Dedup.shingles. */
+  /** Distinct word 2..n-shingles, mirroring graft.spark.ShingleOps.grams. */
   def shingles(text: String, n: Int = 2): Set[String] = {
     val t = tokens(text)
     if (t.length < n) Set.empty
     else t.sliding(n).filter(_.length == n).map(_.mkString(" ")).toSet
+  }
+
+  /** N-gram Jaccard pairs as the `dedup_ngram_jaccard` /
+    * `dedup_jaccard_capped` oracle SQL defines them: a document's grams
+    * are the union over its rows (null text has none), df counts the
+    * documents holding a gram, grams with df > cap count toward no pair,
+    * sizes are the full gram-set sizes, and a pair doc_a < doc_b sharing
+    * a gram is kept when 3·common ≥ size_a + size_b. Rows are
+    * (doc_a, doc_b, common, size_a, size_b). A nested loop over all pairs.
+    */
+  def jaccardPairs(docs: Seq[(Long, String)], n: Int = 2,
+                   cap: Int = Int.MaxValue): Set[(Long, Long, Long, Long, Long)] = {
+    val grams = docs.groupMapReduce(_._1)(d =>
+      if (d._2 == null) Set.empty[String] else shingles(d._2, n))(_ ++ _)
+      .filter(_._2.nonEmpty).toSeq.sortBy(_._1)
+    val df = grams.flatMap(_._2).groupMapReduce(identity)(_ => 1)(_ + _)
+    val rare = grams.map(_._2.filter(df(_) <= cap))
+    (for {
+      i <- grams.indices
+      j <- i + 1 until grams.length
+      common = rare(i).count(rare(j).contains).toLong
+      (sa, sb) = (grams(i)._2.size.toLong, grams(j)._2.size.toLong)
+      if common > 0 && 3 * common >= sa + sb
+    } yield (grams(i)._1, grams(j)._1, common, sa, sb)).toSet
   }
 
   /** MinHash signature: permutation i = xxh64("i:" + gram). */

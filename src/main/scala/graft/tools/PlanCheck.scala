@@ -60,11 +60,11 @@ object PlanCheck {
       graft.SparkEntry.queries("j3_seen_check")(spark, sfDir),
       wants = Seq("Join"), rejects = Seq("CartesianProduct"))
 
-    // 5. jaccard: equi-join on the shingle key only (broadcast at small SF,
-    //    sort-merge at scale), never cartesian
+    // 5. jaccard: one cogroup of doc-sharded gram arrays with the
+    //    replicated probe, never a cartesian or nested-loop pair expansion
     check("ngram jaccard",
       graft.SparkEntry.queries("dedup_ngram_jaccard")(spark, sfDir),
-      wants = Seq("HashJoin"), rejects = Seq("CartesianProduct"))
+      wants = Seq("CoGroup"), rejects = Seq("CartesianProduct", "BroadcastNestedLoopJoin"))
 
     // 6. ANN brute force: broadcast of the query side
     check("ann quantized topk",
